@@ -370,6 +370,11 @@ def main() -> None:
         # the load phase broken into steps, so a stall is attributable
         "headline_passes": headline_passes,
         "load_phases": load_phases,
+        # the load phases run on two overlapped lanes (since r9): each
+        # phase's value includes cross-lane contention and the phases
+        # can sum past "load", so per-phase diffs against records
+        # without this marker compare different things
+        "load_phases_overlapped": True,
         "sentinel_passes": sentinel_passes,
         "sf": float(sf),
     }

@@ -18,6 +18,8 @@ functions/__init__).  No Python UDFs anywhere.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -411,15 +413,17 @@ def overlap_pair_stats(
     # min-common pre-filter (see docstring): computed at plan build,
     # cached with the plan. m = 0 (a doc of only hot shingles) or an
     # empty corpus disables it — the bound degenerates to common ≥ 0.
+    # common is an integral count, so common ≥ x ⇔ common ≥ ⌈x⌉: the
+    # bound is compared as a long, with no per-pair-row cast to double
     pre_common = None
     if min_overlap_frac is not None and min_overlap_frac > 0:
         m = doc_sze.select(F.min("sze")).first()[0]
         if m is not None and m > 0:
-            pre_common = (float(min_overlap_frac) - 1e-6) * float(m)
+            pre_common = math.ceil((float(min_overlap_frac) - 1e-6) * float(m))
 
     def _attach_sizes(counts):
         if pre_common is not None:
-            counts = counts.filter(F.col("common") >= F.lit(pre_common))
+            counts = counts.filter(F.col("common") >= F.lit(pre_common).cast("long"))
         sa = F.broadcast(doc_sze.select(
             F.col(id_col).alias("id_a"), F.col("sze").alias("sz_a")
         ))

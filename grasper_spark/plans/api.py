@@ -500,6 +500,9 @@ class G:
         # templates with repeated parameters) skip parse+compile+analyze
         self._cache_plans = cache_plans
         self._plan_cache: dict[str, DataFrame] = {}
+        # point-shaped query strings in the plan cache -> their shape:
+        # preparing or evicting a shape drops its strings' entries
+        self._plan_owner: dict[str, str] = {}
         self._auto_prepared: dict[str, Any] = {}  # shape -> PreparedQuery|None
         self._shape_seen: dict[str, int] = {}
         import threading
@@ -531,25 +534,55 @@ class G:
             return self._build_index(q)
         if q.startswith("SetConfig"):
             return self._set_config(q)
-        if self._caching_on() and q in self._plan_cache:
-            return self._plan_cache[q]
+        caching = self._caching_on()
+        if caching:
+            df = self._plan_cache.get(q)
+            if df is not None:
+                self._touch(self._auto_prepared.get(self._plan_owner.get(q)))
+                return df
         epoch = self._invalidations
         steps = parse_query(q)
-        if self._caching_on():
-            served = self._try_auto_prepared(steps)
-            if served is not None:
-                return served
-        df = self.traversal(steps).df()
-        # epoch re-check mirrors Traversal.df / _try_auto_prepared: an
-        # invalidation mid-compile means this plan is stale — serve it
-        # once but don't install it
-        if (
-            self._caching_on()
-            and len(self._plan_cache) < 4096
-            and self._invalidations == epoch
-        ):
-            self._plan_cache[q] = df
+        ps = self._point_shape(steps) if caching else None
+        served = self._try_auto_prepared(ps) if ps is not None else None
+        if served is not None:
+            rec, df, rows = served
+        else:
+            rec, df, rows = None, self.traversal(steps).df(), 0
+        if caching:
+            self._install(q, df, epoch, ps[0] if ps else None, rec, rows)
         return df
+
+    def _install(self, q: str, df: DataFrame, epoch: int, shape, rec, rows: int) -> None:
+        """Cache ``df`` as the plan of query string ``q``.
+
+        The epoch re-check mirrors Traversal.df: an invalidation since
+        ``epoch`` means ``df`` bakes in stale state — it is served once
+        but not installed. A point-shaped string is recorded against its
+        shape, so the shape's entries can be dropped when it becomes
+        auto-prepared (its earlier per-query plans would otherwise
+        shadow the template) or is evicted. A template's served entries
+        carry at most its own row count of driver rows into the JVM."""
+        with self._prepare_lock:
+            if len(self._plan_cache) >= 4096 or self._invalidations != epoch:
+                return
+            if shape is not None:
+                cur = self._auto_prepared.get(shape)
+                if rec is None:
+                    if cur not in (None, self._BUILDING):
+                        return  # the shape was prepared meanwhile
+                elif cur is not rec or rec._plan_rows + rows > rec.total_rows:
+                    return  # evicted meanwhile, or over the row bound
+                else:
+                    rec._plan_rows += rows
+                self._plan_owner[q] = shape
+            self._plan_cache[q] = df
+
+    def _drop_plans(self, shape: str) -> None:
+        """Drop the plan-cache entries recorded against ``shape``
+        (caller holds ``_prepare_lock``)."""
+        for q in [q for q, s in self._plan_owner.items() if s == shape]:
+            del self._plan_owner[q]
+            self._plan_cache.pop(q, None)
 
     def prepare(self, template: str, marker: str = "$RAND", **kw: Any):
         """Explicitly prepare a parameterized point-query template
@@ -649,12 +682,12 @@ class G:
     #: driver collect can take seconds; the lock only guards bookkeeping)
     _BUILDING = object()
 
-    def _try_auto_prepared(self, steps) -> Optional[DataFrame]:
+    def _try_auto_prepared(self, ps) -> Optional[tuple]:
+        """(template, DataFrame, driver_rows) when the point shape ``ps``
+        (from :meth:`_point_shape`) is served by an auto-prepared
+        template, else None (run it per-query)."""
         from grasper_spark.plans.prepared import PreparedQuery
 
-        ps = self._point_shape(steps)
-        if ps is None:
-            return None
         shape, steps, idx, value = ps
         rec = self._auto_prepared.get(shape, False)
         if rec is self._BUILDING:
@@ -694,6 +727,7 @@ class G:
                 victim = min(live, key=lambda k: getattr(live[k], "_last_served", 0))
                 live[victim].close()
                 del self._auto_prepared[victim]
+                self._drop_plans(victim)
             self._auto_prepared[shape] = self._BUILDING
             epoch = self._invalidations
         # materialize OUTSIDE the lock: other shapes (and other values of
@@ -717,6 +751,9 @@ class G:
                     settled = True
                     return None
                 self._auto_prepared[shape] = rec
+                if rec is not None:
+                    rec._plan_rows = 0  # driver rows held by plan-cache entries
+                self._drop_plans(shape)
                 settled = True
         finally:
             if not settled:
@@ -728,12 +765,17 @@ class G:
                         del self._auto_prepared[shape]
         return self._serve(shape, rec, value)
 
-    def _serve(self, shape: str, rec, value) -> Optional[DataFrame]:
+    def _serve(self, shape: str, rec, value) -> Optional[tuple]:
         if rec is None:
             return None
-        self._serve_clock += 1
-        rec._last_served = self._serve_clock
-        return rec.df(value)
+        self._touch(rec)
+        return (rec, *rec.serve_df(value))
+
+    def _touch(self, rec) -> None:
+        """Mark an auto-prepared template served (LRU eviction clock)."""
+        if rec is not None and rec is not self._BUILDING:
+            self._serve_clock += 1
+            rec._last_served = self._serve_clock
 
     def refresh(self) -> "G":
         """Data-epoch bump after an ingest: re-load the graph (when a
@@ -768,13 +810,23 @@ class G:
         with self._prepare_lock:
             self._invalidations += 1
             self._plan_cache.clear()
+            self._plan_owner.clear()
             recs = [
                 v
                 for v in self._auto_prepared.values()
                 if v is not None and v is not self._BUILDING
             ]
+            # a shape that was live (or building) keeps its sighting
+            # count, so its first sighting afterwards re-prepares it
+            # instead of paying AUTO_PREPARE_AFTER more per-query runs;
+            # a rejected shape (None) starts counting again
+            self._shape_seen = {
+                k: n
+                for k, n in self._shape_seen.items()
+                if n > self.AUTO_PREPARE_AFTER
+                and self._auto_prepared.get(k, False) is not None
+            }
             self._auto_prepared.clear()
-            self._shape_seen.clear()
         for rec in recs:  # unpersist outside the lock (py4j calls)
             rec.close()
 

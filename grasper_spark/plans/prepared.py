@@ -3,10 +3,10 @@ reference's high-QPS posture.
 
 The reference's emulator answers `g.V().has(k, $RAND)…` templates at
 13K q/s because the leading point filter is served from its in-heap
-index store (/root/reference/core/index_store.hpp:118-164) and the rest
-of the query runs on data already in memory. A per-query Spark job can
-never reach that: parse+compile+analysis alone is ~150 ms of driver
-work, and the smallest job pays scheduler latency.
+index store and the rest of the query runs on data already in memory.
+A per-query Spark job can never reach that: parse+compile+analysis
+alone is ~150 ms of driver work, and the smallest job pays scheduler
+latency.
 
 Spark-first equivalent: treat the template as ONE grouped query. The
 parameterized `has(key, eq($PARAM))` step is removed and replaced by a
@@ -14,14 +14,24 @@ parameterized `has(key, eq($PARAM))` step is removed and replaced by a
 group column, so every downstream step — traversals, filters, per-group
 barriers, even per-group range/order (the compiler's labelled-branch
 machinery) — computes the answer FOR EVERY PARAMETER VALUE in a single
-job. The keyed result is then:
+job. The keyed result is persisted and then served from one of two
+tiers:
 
-- collected into a driver-local hash map when it fits
-  (``max_local_rows``) — each query is a dict probe, microseconds, the
-  exact analogue of the reference's in-heap posting serve; or
-- kept as a CACHED DataFrame keyed by the parameter — each query is a
-  filter over in-memory data (no re-parse, no re-analysis of the full
-  template), the distributed tier for results that outgrow the driver.
+- **local**: collected into a driver-side hash map when it fits
+  (``max_local_rows``) — :meth:`PreparedQuery.rows` is a dict probe,
+  microseconds, the analogue of the reference's in-heap posting serve;
+- **relation**: kept as the persisted keyed DataFrame — a value's first
+  :meth:`PreparedQuery.rows` call is a filter job over in-memory data,
+  and its answer then stays in a bounded per-key row LRU.
+
+:meth:`PreparedQuery.df` answers the same way whenever the driver holds
+the rows (the local map, or a row-LRU hit): it returns a LocalRelation
+built through Arrow, which plans as a ``LocalTableScan`` and collects
+without starting a Spark job. Only relation-tier misses and result
+dtypes the Arrow round trip does not reproduce (``_ARROW_SAFE``) are
+served as a filter over the persisted relation. ``G.query`` caches the
+served DataFrame in its plan cache, so a repeated query string re-runs
+that LocalRelation with no parse and no Arrow build.
 
 At 100 TB the same split holds: the one materialization job is a normal
 grouped query (shuffle keyed by the parameter value), and the serving
@@ -291,9 +301,13 @@ class PreparedQuery:
         elif _BARRIERS.intersection(_walk_names(steps)):
             self._empty_rows = self._empty_result_rows(g, steps, idxs)
         self.param_dtype = self.param_dtypes[0]
-        self.columns = [
-            col_ for col_ in self._out_df.columns if col_ not in self._pqcols
-        ]
+        # the served (per-value) schema: df() answers carry exactly the
+        # keyed relation's result columns, types and nullability
+        self._schema = self._out_df.drop(*self._pqcols).schema
+        self.columns = self._schema.names
+        self._arrow_ok = all(
+            self._arrow_safe(f.dataType.simpleString()) for f in self._schema
+        )
 
         self._local: Optional[dict] = None
         # relation tier: per-key result LRU — a hot key pays its filter
@@ -303,10 +317,10 @@ class PreparedQuery:
 
         self._row_lru: "OrderedDict" = OrderedDict()
         self._lru_lock = _threading.Lock()
-        # the keyed relation is cached in BOTH tiers: rows() serves from
-        # the driver map when it fits, while df() always filters the
-        # in-memory relation (a createDataFrame from driver rows would
-        # cost more per query than the cached filter)
+        # the keyed relation is cached in BOTH tiers: rows() and df()
+        # serve from the driver map when it fits, and df() falls back to
+        # a filter over the in-memory relation when the driver lacks the
+        # rows (relation-tier miss) or Arrow cannot carry the dtypes
         self._rel: Optional[DataFrame] = self._out_df.persist()
         if side is not None:
             # warm start: the persist stays LAZY (first df() call
@@ -743,6 +757,18 @@ class PreparedQuery:
             return None
         return out[0] if len(self._pqcols) == 1 else out
 
+    def _driver_rows(self, v) -> Optional[list]:
+        """The answer for the coerced key ``v`` when the driver holds it
+        (the local map, or a relation-tier row-LRU hit), else None."""
+        if self._local is not None:
+            hit = self._local.get(v)
+            return hit if hit is not None else list(self._empty_rows)
+        with self._lru_lock:
+            hit = self._row_lru.get(v)
+            if hit is not None:
+                self._row_lru.move_to_end(v)
+            return hit
+
     def rows(self, value: Any) -> list[tuple]:
         """Answer the template for one parameter value (a scalar, or a
         tuple for multi-parameter templates). Values outside the
@@ -753,14 +779,9 @@ class PreparedQuery:
         v = self._coerce_all(value)
         if v is None:
             return list(self._empty_rows)
-        if self._local is not None:
-            hit = self._local.get(v)
-            return hit if hit is not None else list(self._empty_rows)
-        with self._lru_lock:
-            hit = self._row_lru.get(v)
-            if hit is not None:
-                self._row_lru.move_to_end(v)
-                return hit
+        hit = self._driver_rows(v)
+        if hit is not None:
+            return hit
         out = [tuple(r) for r in self._filtered(v).collect()]
         res = out if out else list(self._empty_rows)
         with self._lru_lock:
@@ -777,35 +798,58 @@ class PreparedQuery:
         return self._rel.filter(cond).drop(*self._pqcols)
 
     def _empty_df(self) -> DataFrame:
-        base = self._rel.filter(F.lit(False)).drop(*self._pqcols)
         if not self._empty_rows:
-            return base
+            return self._rel.filter(F.lit(False)).drop(*self._pqcols)
         return self._g.graph.spark.createDataFrame(
-            list(self._empty_rows), base.schema
+            list(self._empty_rows), self._schema
         )
 
+    def _local_df(self, rows: list) -> DataFrame:
+        """A LocalRelation over driver rows, built through Arrow: under
+        ``spark.sql.execution.arrow.localRelationThreshold`` it plans as
+        a ``LocalTableScan``, and collecting it starts no Spark job (a
+        ``createDataFrame`` from a Python list would parallelize the
+        rows and run one)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._schema)
+        cols = list(zip(*rows)) if rows else [()] * len(schema)
+        tbl = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        )
+        return self._g.graph.spark.createDataFrame(tbl, self._schema)
+
     def df(self, value: Any) -> DataFrame:
-        """DataFrame form: a filter over the keyed relation, with the
-        same out-of-domain synthesis as :meth:`rows` for barrier
-        templates (``_empty_rows``)."""
+        """DataFrame form of :meth:`rows`, with the same out-of-domain
+        synthesis for barrier templates (``_empty_rows``)."""
+        return self.serve_df(value)[0]
+
+    def serve_df(self, value: Any) -> tuple:
+        """(DataFrame, driver_rows) for one parameter value.
+        ``driver_rows`` counts the result rows the DataFrame carries
+        from the driver into the JVM — 0 when it is a plan over the
+        keyed relation — so a caller that keeps served DataFrames
+        (``G.query``'s plan cache) can bound those copies."""
         v = self._coerce_all(value)
-        if v is None:
-            return self._empty_df()
-        if self._empty_rows:
+        if v is None or (
             # barrier template: an absent group must serve the
             # empty-input aggregate, not an empty relation
-            if self._local is not None:
-                if v not in self._local:
-                    return self._empty_df()
-            else:
-                # relation tier: route through rows() — LRU-backed, so a
-                # hot key costs zero jobs here and a cold key costs ONE
-                # (a separate take(1) existence probe would add a job to
-                # every serve); barrier results are aggregates, small
-                res = self.rows(value)
-                base = self._rel.filter(F.lit(False)).drop(*self._pqcols)
-                return self._g.graph.spark.createDataFrame(res, base.schema)
-        return self._filtered(v)
+            self._empty_rows and self._local is not None and v not in self._local
+        ):
+            return self._empty_df(), len(self._empty_rows)
+        # relation-tier barrier: route through rows() — LRU-backed, so a
+        # hot key costs zero jobs here and a cold key costs ONE (a
+        # separate take(1) existence probe would add a job to every
+        # serve); barrier results are aggregates, small
+        barrier_rel = bool(self._empty_rows) and self._local is None
+        hit = self.rows(value) if barrier_rel else self._driver_rows(v)
+        if hit is not None and self._arrow_ok:
+            return self._local_df(hit), len(hit)
+        if barrier_rel:
+            return self._g.graph.spark.createDataFrame(hit, self._schema), len(hit)
+        return self._filtered(v), 0
 
     def param_values(self) -> list:
         """Distinct parameter values (scalars, or tuples for

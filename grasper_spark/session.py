@@ -33,6 +33,39 @@ def _local_dir() -> str:
     return tempfile.gettempdir()
 
 
+def _mem_bytes() -> int | None:
+    """Memory this process may use: physical RAM, capped by a cgroup v2
+    limit when one is set; None when neither can be read."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        total = None
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            lim = fh.read().strip()
+        if lim.isdigit():
+            total = min(total, int(lim)) if total else int(lim)
+    except OSError:
+        pass
+    return total
+
+
+def default_driver_memory(mem_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half of the host's memory, whole
+    GiB, clamped to [1g, 32g] (32g when the memory cannot be read).
+
+    In local mode the driver JVM is the whole cluster, so it is sized
+    like the sum of executors — but a heap larger than the host lets the
+    JVM grow until the kernel OOM-kills it (a 32g heap on a 16 GB host
+    does). Half leaves room for the Python workers, tmpfs shuffle files
+    and off-heap Arrow buffers."""
+    if mem_bytes is None:
+        mem_bytes = _mem_bytes()
+    if not mem_bytes:
+        return "32g"
+    return f"{max(1, min(32, int(mem_bytes) // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "grasper_spark",
     master: str | None = None,
@@ -61,10 +94,14 @@ def get_spark(
         # like the sum of executors, not like a driver. With 8g, the
         # cached graph snapshot + persisted shingle relations from early
         # bench queries evict/GC-thrash the later ones (observed 3-4×
-        # inflation on the doc_* queries at sf0.1); 32g keeps the
-        # working set resident. On a real cluster this knob moves to
-        # executor memory and the default driver size is fine.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # inflation on the doc_* queries at sf0.1), so the default takes
+        # half the host (up to 32g; see default_driver_memory). On a
+        # real cluster this knob moves to executor memory and the
+        # default driver size is fine.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # local-mode: shuffle/spill files on the virtual disk stall for
         # seconds under host I/O contention (observed 3-10× spikes on
         # shuffle-heavy queries); tmpfs makes them RAM-speed. Harmless

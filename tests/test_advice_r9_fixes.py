@@ -1,0 +1,36 @@
+"""ADVICE r9 follow-ups.
+
+1. dedup.py — the min-overlap pre-filter compares the integral ``common``
+   count against an integer bound (⌈(t − 1e-6)·m⌉) as a long, not against
+   a float literal that forced a per-pair-row cast to double.
+2. bench.py — the record flags that its load phases ran overlapped.
+"""
+
+import os
+
+import pytest
+
+
+@pytest.mark.parametrize("threshold,bound", [(0.2, 2), (0.5, 4), (0.8, 7)])
+def test_min_overlap_prefilter_bound_is_an_integer(spark, threshold, bound):
+    from grasper_spark.functions import dedup as D
+
+    rows = [(i, f"a b c d e f g h i j{i}") for i in range(4)]  # m = 8 trigrams
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    D._SH_ARGS_CACHE.clear()
+    D._OPS_CACHE.clear()
+    out = D.overlap_pair_stats(df, min_overlap_frac=threshold)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    (line,) = [x for x in plan.splitlines() if "Filter" in x and "common#" in x]
+    assert f">= {bound})" in line and "double" not in line, line
+    # every pair shares 7 of 8 trigrams: kept exactly when 7 ≥ the bound
+    assert out.count() == (6 if 7 >= bound else 0)
+
+
+def test_bench_record_marks_overlapped_load_phases():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "bench.py")) as fh:
+        src = fh.read()
+    assert '"load_phases_overlapped": True' in src
+    compact = src.split("compact = {", 1)[1].split("}", 1)[0]
+    assert "load_phases_overlapped" not in compact

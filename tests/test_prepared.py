@@ -302,8 +302,15 @@ def test_auto_prepare_invalidated_by_config_change(modern):
     for n in ("marko", "vadas", "josh"):
         gi.query(q.format(n)).collect()
     assert len(gi._auto_prepared) == 1
+    (shape,) = gi._auto_prepared
     gi.query("SetConfig('seed', '7')")
-    assert gi._auto_prepared == {} and gi._shape_seen == {}
+    assert gi._auto_prepared == {} and gi._plan_cache == {}
+    # the shape was live, so it keeps its sighting count and its first
+    # sighting after the invalidation re-prepares it (not its third)
+    assert gi._shape_seen == {shape: gi.AUTO_PREPARE_AFTER + 1}
+    assert [r.val for r in gi.query(q.format("peter")).collect()] == [35]
+    assert gi._auto_prepared[shape] is not None
+    gi._auto_prepared[shape].close()
 
 
 def test_prepared_snapshot_roundtrip(g, tmp_path):

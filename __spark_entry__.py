@@ -165,7 +165,10 @@ def _tbl(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     hit = _TBL_CACHE.get(key)
     if hit is None:
         ensure_runtime_confs(spark)
-        hit = _TBL_CACHE[key] = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        # setdefault: concurrent load lanes settle on one handle per key
+        hit = _TBL_CACHE.setdefault(
+            key, spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        )
     return hit
 
 

@@ -64,6 +64,16 @@ SCALE_QUERIES = [
 ]
 SCALE_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALING", "10"))
 
+#: emu config (seconds clients / count / template key weight) for the
+#: per-query fallback tier: the two sample(2) templates stay outside the
+#: prepared layer's grouped model, the last one prepares
+_EMU_FALLBACK_CFG = """15 2
+3
+g.V().has("name","$RAND").sample(2).out("placed").values("totalprice")  name  10
+g.V().has("mktsegment","$RAND").sample(2).values("name")  mktsegment  10
+g.V().has("mktsegment","$RAND").values("name")  mktsegment  10
+"""
+
 
 def _ensure_scaled(spark, sf_dir: str, factor: int) -> str:
     """Deterministically synthesize a factor× documents corpus from
@@ -657,10 +667,12 @@ def main() -> None:
     except Exception as ex:  # emu is informational — never fail the bench
         print(f"# emu skipped: {ex}", file=sys.stderr)
 
-    # per-query FALLBACK tier: a template the prepared layer rejects
-    # (coin() — global seeded sampling) served by per-query Spark jobs;
-    # per_template_p50_ms records each tier's latency separately (the
-    # reference's emu measures arbitrary templates, driver/worker.hpp)
+    # per-query FALLBACK tier: sample(n) templates (a global top-n the
+    # prepared layer rejects) served by per-query Spark jobs beside one
+    # prepared template; per_template_p50_ms records each tier's latency
+    # separately (the reference's emu measures arbitrary templates,
+    # driver/worker.hpp). The config is inline: coin() templates, as in
+    # configs/emu_fallback.txt, now prepare like any point template
     try:
         from grasper_spark.emu import run_emu as _emu_fb
 
@@ -668,9 +680,7 @@ def main() -> None:
         # 5-value domain, so repeats exercise the row-LRU and the
         # record carries BOTH regimes (per_template_regimes/lru_stats),
         # not just the all-cold unique-value floor
-        with open(os.path.join(os.path.dirname(__file__),
-                               "configs", "emu_fallback.txt")) as fh:
-            fb = _emu_fb(g, fh.read(), max_queries=120)
+        fb = _emu_fb(g, _EMU_FALLBACK_CFG, max_queries=120)
         result["emu_fallback"] = fb.as_dict()
         print(f"# emu_fallback: modes={fb.template_modes} "
               f"per-template p50={fb.per_template_p50_ms}ms", file=sys.stderr)

@@ -22,7 +22,7 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame
 
 from grasper_spark.graph import PropertyGraph
-from grasper_spark.plans.compiler import GremlinCompiler, Step, Stream
+from grasper_spark.plans.compiler import GremlinCompiler, Step, Stream, number_coins
 from grasper_spark.plans.parser import parse_query
 from grasper_spark.plans.predicates import P, Pred  # noqa: F401 (re-export)
 
@@ -314,7 +314,7 @@ class Traversal:
             index_store=self._ctx._index_store if self._ctx is not None else None,
             config=self._ctx._config if self._ctx is not None else None,
         )
-        return c, c.compile(list(self._steps))
+        return c, c.compile(number_coins(self._steps))
 
     def to_subgraph(self, name: str = "subgraph"):
         """Materialize the current EDGE stream as a first-class
@@ -449,9 +449,11 @@ class G:
     #: steps whose per-parameter grouped execution is INDISTINGUISHABLE
     #: from per-query execution (pure per-traverser semantics).
     #: Positional slices (limit/range/…) are excluded — their
-    #: arbitrary-pick tie-breaks may differ under grouping.
+    #: arbitrary-pick tie-breaks may differ under grouping. coin(p) is
+    #: a content-hashed per-traverser draw, identical under grouping.
     _AUTO_STEPS = frozenset(
         ["V", "E", "has", "hasNot", "hasKey", "hasValue", "hasLabel", "is",
+         "coin",
          "out", "in", "both", "outE", "inE", "bothE", "outV", "inV",
          "bothV", "hasId", "values", "properties", "key", "label", "id", "valueMap",
          "elementMap", "select", "as", "where", "dedup", "union", "and",

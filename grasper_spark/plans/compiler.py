@@ -136,6 +136,52 @@ class Step:
         return f"{self.name}({', '.join(map(repr, self.args))})"
 
 
+def number_coins(steps: Sequence[Step]) -> list[Step]:
+    """Give every coin(p) in a traversal tree its pre-order ordinal as
+    a second argument, coin(p, k). The ordinal salts that step's draw
+    (``_step_coin``), so two coin steps over one stream flip
+    independently; the grouped (prepared) and per-query compiles of one
+    template see the same tree, so each coin gets the same salt in both.
+    Idempotent: renumbering a numbered tree gives the same ordinals."""
+    n = itertools.count()
+
+    def walk(a: Any) -> Any:
+        if isinstance(a, Step):
+            if a.name == "coin":
+                return Step("coin", (a.args[0], next(n)))
+            args = tuple(walk(x) for x in a.args)
+            return a if args == a.args else Step(a.name, args)
+        if isinstance(a, (tuple, list)):
+            return type(a)(walk(x) for x in a)
+        return a
+
+    return [walk(st) for st in steps]
+
+
+def _has_coin(tree: Any) -> bool:
+    """Whether a step tree (a Step, or nested tuples/lists of them)
+    holds a coin() step anywhere."""
+    if isinstance(tree, Step):
+        return tree.name == "coin" or _has_coin(tree.args)
+    if isinstance(tree, (tuple, list)):
+        return any(_has_coin(x) for x in tree)
+    return False
+
+
+def _traverser_identity(names: Sequence[str]) -> list[Column]:
+    """Columns naming a traverser alike under grouped (prepared) and
+    per-query execution: each non-``_tid`` column as is, each branch
+    tag ``_tidK`` without its h2 field (h2 hashes the prepared
+    passenger), and no passenger column ``_tidpq*`` at all."""
+    out = []
+    for c in names:
+        if not c.startswith(TID):
+            out.append(F.col(c))
+        elif c[len(TID):].isdigit():
+            out.append(F.col(c).dropFields("h2"))
+    return out
+
+
 @dataclass
 class Stream:
     df: DataFrame
@@ -192,6 +238,7 @@ class GremlinCompiler:
         self.index_store = index_store
         self.config = config or {}
         self.index_hits = 0  # scans converted to index lookups (observable)
+        self._rounds: tuple[int, ...] = ()  # enclosing repeat() iterations
         self.side_effects: dict[str, DataFrame] = {}
         self._v_renamed: Optional[DataFrame] = None
         self._e_renamed: Optional[DataFrame] = None
@@ -623,8 +670,41 @@ class GremlinCompiler:
             s, df=s.df.filter(pred_to_condition(pred, F.col(VAL), dtype=s.dtype))
         )
 
-    def _step_coin(self, s: Stream, p: float) -> Stream:
-        return replace(s, df=s.df.sample(fraction=float(p), seed=self.seed))
+    def _step_coin(self, s: Stream, p: float, site: int = 0) -> Stream:
+        """coin(p): an independent Bernoulli(p) draw per traverser at
+        each coin step (the reference's expert/barrier_expert.hpp:
+        960-1045), made a pure function of the row's content so it does
+        not depend on how the rows are partitioned. Keep the row iff
+        u < p, with u the low 53 bits of xxhash64(seed, site, rounds,
+        value, history, copy ordinal) over 2^53.
+
+        ``site`` is the step's ordinal in its traversal (number_coins)
+        and ``rounds`` the enclosing repeat() iterations, so chained
+        coins, coins in sibling branches and one coin in successive loop
+        rounds draw independently. History enters through
+        ``_traverser_identity``: the prepared passenger is left out and
+        each branch tag contributes its grouping-free fields, whose
+        values agree between grouped and per-query execution, so
+        traversers of different outer traversers reaching one vertex
+        inside where()/and() still draw apart. The copy ordinal is a
+        row_number over ALL stream columns, so identical copies of one
+        traverser flip independently (the `_tagged(unique=True)`
+        pattern); partitioning by the passenger too keeps each
+        parameter's copies apart under grouping. Costs one exchange for
+        0 < p < 1."""
+        p = float(p)
+        if p >= 1.0:
+            return s
+        if p <= 0.0:
+            return replace(s, df=s.df.filter(F.lit(False)))
+        cols = s.df.columns if s.kind == "G" else s.core_cols() + s.hist_cols()
+        salt = [F.lit(self.seed), F.lit(site), *[F.lit(r) for r in self._rounds]]
+        ocol = f"_cn{next(_uid)}"
+        w = Window.partitionBy(*[F.col(c) for c in s.df.columns]).orderBy(F.lit(1))
+        df = s.df.withColumn(ocol, F.row_number().over(w))
+        h = F.xxhash64(*salt, *_traverser_identity(cols), F.col(ocol))
+        u = h.bitwiseAND(F.lit((1 << 53) - 1)).cast("double") / float(1 << 53)
+        return replace(s, df=df.filter(u < F.lit(p)).drop(ocol))
 
     def _step_sample(self, s: Stream, n: int) -> Stream:
         """sample(n) (extension — TinkerPop semantics, not in the
@@ -1689,9 +1769,28 @@ class GremlinCompiler:
         # /root/reference/core/parser.cpp:1305-1318); times>1 unrolling
         # and until()/emit() iteration are our parity-plus extensions
         # (TinkerPop semantics).
+        outer = self._rounds
+        try:
+            return self._repeat_rounds(s, branch, times, until, emit)
+        finally:
+            self._rounds = outer
+
+    def _repeat_rounds(
+        self,
+        s: Stream,
+        branch: Sequence[Step],
+        times: int,
+        until: Optional[Sequence[Step]],
+        emit: bool,
+    ) -> Stream:
+        # each round compiles under its own self._rounds entry, so a
+        # coin() in the body (or the until() condition) draws afresh
+        # every round
+        outer = self._rounds
         if until is None and not emit:
             out = s
-            for _ in range(max(1, times)):
+            for i in range(max(1, times)):
+                self._rounds = outer + (i,)
                 out = self.compile(list(branch), start=out)
             return out
         # iterative driver loop (same shape as algos.py supersteps:
@@ -1703,6 +1802,7 @@ class GremlinCompiler:
         frontier = s
         collected: list[Stream] = []
         for i in range(bound):
+            self._rounds = outer + (i,)
             frontier = self.compile(list(branch), start=frontier)
             if until is None:
                 collected.append(frontier)  # emit(): every position
@@ -1770,15 +1870,21 @@ class GremlinCompiler:
         The tid is a STRUCT of two independently-salted 64-bit hashes —
         128 effective bits, so the birthday bound sits at ~2^64 distinct
         traversers (a single 64-bit hash becomes collision-prone past
-        ~10^9, reachable in a large labelled branch at cluster scale)."""
+        ~10^9, reachable in a large labelled branch at cluster scale).
+        h2 covers the whole history; h1 covers ``_traverser_identity``
+        of it (no prepared passenger, outer tags without their h2), so
+        h1 — and rn — take the same values under grouped and per-query
+        execution, which coin() draws inside a branch rely on."""
         k = sum(1 for c in s.df.columns if c.startswith(TID))
         tcol = f"{TID}{k}"
-        cols = [s.val(), *[F.col(c) for c in s.hist_cols()]]
+        hist = s.hist_cols()
         df = s.df.withColumn(
             tcol,
             F.struct(
-                F.xxhash64(*cols).alias("h1"),
-                F.xxhash64(F.lit(1), *cols).alias("h2"),
+                F.xxhash64(s.val(), *_traverser_identity(hist)).alias("h1"),
+                F.xxhash64(
+                    F.lit(1), s.val(), *[F.col(c) for c in hist]
+                ).alias("h2"),
             ),
         )
         if unique:
@@ -1798,8 +1904,9 @@ class GremlinCompiler:
 
     #: steps safe to share in a factored labelled-branch prefix: pure
     #: row-local traversals/filters — no side effects (aggregate/store),
-    #: no RNG (coin/sample), no barriers (order/range/limit) whose
-    #: factoring could observe a different stream
+    #: no draws (each branch's coin is its own draw; sample), no
+    #: barriers (order/range/limit) whose factoring could observe a
+    #: different stream
     _FACTORABLE_STEPS = frozenset({
         "out", "in", "both", "outE", "inE", "bothE", "outV", "inV",
         "bothV", "has", "hasNot", "hasKey", "hasValue", "hasLabel",
@@ -1815,8 +1922,10 @@ class GremlinCompiler:
     def _labelled_filter(self, s: Stream, branches: Sequence[Sequence[Step]], mode: str) -> Stream:
         # per-traverser existential test: pass iff all/any/none branches
         # produced ≥1 result for this input traverser
-        # (/root/reference/expert/labelled_branch_expert.hpp:184-289)
-        tagged, tcol = self._tagged(s)
+        # (/root/reference/expert/labelled_branch_expert.hpp:184-289).
+        # Identical traversers share a tid unless a branch draws: then
+        # each copy must flip on its own, so the tids are made unique
+        tagged, tcol = self._tagged(s, unique=_has_coin(branches))
         branches = [list(b) for b in branches]
         start = tagged
         if len(branches) > 1:

@@ -55,6 +55,7 @@ from grasper_spark.plans.compiler import (
     CompileError,
     GremlinCompiler,
     Step,
+    number_coins,
 )
 from grasper_spark.plans.parser import parse_query
 from grasper_spark.plans.predicates import Pred
@@ -68,10 +69,13 @@ PQCOL = f"{TID}pq"
 _SENTINEL = "__GRASPER_PARAM_7f3a__"
 
 #: steps whose semantics are NOT per-traverser (global side-effect
-#: stores, sampling, path recording) — grouping by the parameter would
-#: silently change their meaning, so such templates fall back
+#: stores, sample(n)'s global top-n, path recording) — grouping by the
+#: parameter would silently change their meaning, so such templates
+#: fall back. coin(p) is absent: its draw hashes the row's value and
+#: the history without the passenger, so each parameter's rows flip
+#: exactly as they do per query (compiler ``_step_coin``).
 _UNSUPPORTED = frozenset(
-    ["aggregate", "store", "cap", "coin", "sample", "path", "simplePath",
+    ["aggregate", "store", "cap", "sample", "path", "simplePath",
      "cyclicPath", "inject"]
 )
 
@@ -236,6 +240,8 @@ class PreparedQuery:
                 if isinstance(param_idx, (list, tuple))
                 else [param_idx]
             )
+        # coin sites as the per-query compile (Traversal) numbers them
+        steps = number_coins(steps)
         _validate_steps(steps)
         self.keys = [
             "__id__" if steps[i].name == "hasId" else steps[i].args[0]

@@ -4,6 +4,9 @@
    count against an integer bound (⌈(t − 1e-6)·m⌉) as a long, not against
    a float literal that forced a per-pair-row cast to double.
 2. bench.py — the record flags that its load phases ran overlapped.
+3. __spark_entry__._tbl — concurrent load lanes settle on one table
+   handle per key (``setdefault``), so identity-keyed memos downstream
+   see a single DataFrame.
 """
 
 import os
@@ -34,3 +37,33 @@ def test_bench_record_marks_overlapped_load_phases():
     assert '"load_phases_overlapped": True' in src
     compact = src.split("compact = {", 1)[1].split("}", 1)[0]
     assert "load_phases_overlapped" not in compact
+
+
+def test_tbl_cache_concurrent_callers_share_one_handle(spark, tmp_path):
+    import sys
+    import threading
+
+    import __spark_entry__ as entry
+
+    spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+    key = (id(spark), str(tmp_path), "t")
+    entry._TBL_CACHE.pop(key, None)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    got, start = [], threading.Barrier(8)
+
+    def lane():
+        start.wait(timeout=30)
+        got.append(entry._tbl(spark, str(tmp_path), "t"))
+
+    try:
+        threads = [threading.Thread(target=lane) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+        entry._TBL_CACHE.pop(key, None)
+    assert len(got) == 8 and all(df is got[0] for df in got)

@@ -33,11 +33,11 @@ def test_run_emu_on_modern(g):
 
 
 def test_run_emu_fallback_template_measured(g):
-    # coin() is not preparable → per-query mode, measured separately
+    # sample() is not preparable → per-query mode, measured separately
     cfg = """
 5 2
 2
-g.V().has("name","$RAND").coin(1.0).values("age")  name  10
+g.V().has("name","$RAND").sample(2).values("age")  name  10
 g.V().has("name","$RAND").values("age")  name  10
 """
     res = run_emu(g, cfg, max_queries=10)

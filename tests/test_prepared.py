@@ -179,7 +179,7 @@ def test_prepared_rejects_out_of_scope_shapes(g, template):
     "template",
     [
         'g.V().has("name","$RAND").aggregate("x").cap("x")',    # side-effect
-        'g.V().has("name","$RAND").coin(0.5).count()',          # sampling
+        'g.V().has("name","$RAND").sample(2).count()',          # global top-n
     ],
 )
 def test_prepared_semantic_scope_shapes_fall_back(g, template):

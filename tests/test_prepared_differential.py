@@ -80,6 +80,18 @@ def point_shape(draw):
                 keys.append(k2)
                 steps.append(Step("has", (k2, P.eq("__PLACEHOLDER__"))))
                 second = False
+    # coin(p): a content-hashed per-traverser draw, so grouped and
+    # per-query execution keep the same rows — top level, or nested in
+    # a where()/and() branch (the parser reads where(t) as and(t))
+    coin = draw(st.sampled_from(["none", "coin", "where_coin", "and_coin"]))
+    p = draw(st.sampled_from([0.3, 0.5, 0.8]))
+    if coin == "coin":
+        steps.append(Step("coin", (p,)))
+    elif coin != "none" and kind == "V":
+        branches = [(Step("both", ()), Step("coin", (p,)))]
+        if coin == "and_coin":
+            branches.append((Step("coin", (p,)),))
+        steps.append(Step("and", tuple(branches)))
     tail = draw(st.sampled_from(
         ["none", "values", "label", "dedup", "dedup_values",
          # barrier tails: empty parameter groups must serve the

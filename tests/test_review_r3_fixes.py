@@ -42,9 +42,9 @@ def test_nested_union_barrier_rejected(g):
             g, 'g.V().has("age",$RAND).union(out("knows").count())',
             fallback=False,
         )
-    # nested coin inside a branch is rejected too (deep _UNSUPPORTED)
+    # nested sample inside a branch is rejected too (deep _UNSUPPORTED)
     with pytest.raises(PrepareError, match="not preparable"):
-        prepare(g, 'g.V().has("age",$RAND).and(out().coin(0.5))', fallback=False)
+        prepare(g, 'g.V().has("age",$RAND).and(out().sample(2))', fallback=False)
     # the default returns the fallback tier with per-query answers
     p = prepare(g, 'g.V().has("age",$RAND).union(out("knows").count())')
     assert p.mode == "fallback"

@@ -172,7 +172,7 @@ def test_emu_per_query_tier_uses_perquery_prepared(small_graph):
     from grasper_spark.emu import run_emu
 
     g = G(small_graph, cache_plans=False)
-    cfg = '5 1\n1\ng.V().has("name","$RAND").coin(0.5).values("grp")  name  10\n'
+    cfg = '5 1\n1\ng.V().has("name","$RAND").sample(2).values("grp")  name  10\n'
     res = run_emu(g, cfg, max_queries=5)
     assert res.template_modes == {0: "per-query"}
     assert res.total_queries == 5

@@ -267,6 +267,22 @@ def _persisted_doc_sizes(rel: DataFrame, id_col: str) -> DataFrame:
 _SH_ARGS_CACHE: dict = {}
 #: same identity fast path for the assembled overlap_pair_stats plan
 _OPS_CACHE: dict = {}
+#: eager scalars of the persisted shingle relation (the id bounds, the
+#: min effective doc size per max_shingle_df), kept beside the relation
+#: they were read from: [(rel, {key: value})]. Keyed on the relation,
+#: not on the caller's threshold, so plans for alternating thresholds
+#: rebuild without re-running the scalar jobs.
+_REL_SCALARS: list = []
+
+
+def _rel_scalar(rel: DataFrame, key, compute):
+    """``compute()``, memoized per persisted shingle relation ``rel``."""
+    if not _REL_SCALARS or _REL_SCALARS[0][0] is not rel:
+        _REL_SCALARS[:] = [(rel, {})]
+    memo = _REL_SCALARS[0][1]
+    if key not in memo:
+        memo[key] = compute()
+    return memo[key]
 
 
 def _hashed_shingle_relation(
@@ -411,13 +427,17 @@ def overlap_pair_stats(
     )
     aggs = [F.count(F.lit(1)).alias("common")]
     # min-common pre-filter (see docstring): computed at plan build,
-    # cached with the plan. m = 0 (a doc of only hot shingles) or an
-    # empty corpus disables it — the bound degenerates to common ≥ 0.
+    # m kept with the persisted relation (_rel_scalar). m = 0 (a doc of
+    # only hot shingles) or an empty corpus disables it — the bound
+    # degenerates to common ≥ 0.
     # common is an integral count, so common ≥ x ⇔ common ≥ ⌈x⌉: the
     # bound is compared as a long, with no per-pair-row cast to double
     pre_common = None
     if min_overlap_frac is not None and min_overlap_frac > 0:
-        m = doc_sze.select(F.min("sze")).first()[0]
+        m = _rel_scalar(
+            rel, ("min_sze", max_shingle_df),
+            lambda: doc_sze.select(F.min("sze")).first()[0],
+        )
         if m is not None and m > 0:
             pre_common = math.ceil((float(min_overlap_frac) - 1e-6) * float(m))
 
@@ -435,16 +455,16 @@ def overlap_pair_stats(
         )
     # guarded pair-key packing (guide §2.3 — narrower shuffle keys):
     # when every id provably fits 31 bits (one cheap aggregate over the
-    # PERSISTED relation, computed once per corpus — the assembled plan
-    # is identity-cached below), the pair groupBy keys on ONE packed
+    # PERSISTED relation, computed once per corpus and kept with it by
+    # _rel_scalar), the pair groupBy keys on ONE packed
     # long instead of two — 8 fewer key bytes and one hash/compare per
     # pair row through the heaviest exchange of the query. Unpacking
     # restores the exact (id_a, id_b) columns, cast to the input id
     # dtype, so the output is bit-identical; ids outside [0, 2^31)
     # keep the two-column key (a library must not assume 32-bit ids).
-    bounds = rel.select(
+    bounds = _rel_scalar(rel, ("id_bounds", id_col), lambda: rel.select(
         F.min(id_col).alias("mn"), F.max(id_col).alias("mx")
-    ).first()
+    ).first())
     id_dt = dict(rel.dtypes)[id_col]
     if (
         bounds.mn is not None

@@ -25,13 +25,17 @@ tiers:
   and its answer then stays in a bounded per-key row LRU.
 
 :meth:`PreparedQuery.df` answers the same way whenever the driver holds
-the rows (the local map, or a row-LRU hit): it returns a LocalRelation
-built through Arrow, which plans as a ``LocalTableScan`` and collects
-without starting a Spark job. Only relation-tier misses and result
-dtypes the Arrow round trip does not reproduce (``_ARROW_SAFE``) are
-served as a filter over the persisted relation. ``G.query`` caches the
-served DataFrame in its plan cache, so a repeated query string re-runs
-that LocalRelation with no parse and no Arrow build.
+the rows (the local map, or a row-LRU hit): it returns a
+:class:`ServedFrame`, a DataFrame over a LocalRelation built through
+Arrow (it plans as a ``LocalTableScan`` and starts no Spark job) that
+also keeps the value's driver rows. Its ``collect()`` returns those
+rows as ``Row`` objects with no JVM round trip; every other method runs
+on the LocalRelation. Only relation-tier misses, result dtypes the
+Arrow round trip does not reproduce (``_ARROW_SAFE``) and the
+empty-input synthesis of barrier templates are served as plain
+DataFrames. ``G.query`` caches the served frame in its plan cache, so a
+repeated query string costs a list copy: no parse, no Arrow build and
+no py4j call.
 
 At 100 TB the same split holds: the one materialization job is a normal
 grouped query (shuffle keyed by the parameter value), and the serving
@@ -43,8 +47,9 @@ from __future__ import annotations
 from dataclasses import replace
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from grasper_spark.plans.compiler import (
     EDST,
@@ -188,6 +193,35 @@ def _engine_version() -> str:
                 h.update(b"?")
         _ENGINE_VERSION = h.hexdigest()[:8]
     return _ENGINE_VERSION
+
+
+class ServedFrame(ClassicDataFrame):
+    """A driver-held answer as a DataFrame: the LocalRelation over the
+    answer's rows, plus the rows themselves.
+
+    ``collect()`` returns the rows as ``Row`` objects, built on the
+    first call and kept, as a fresh list each time, with no py4j call
+    (``DataFrame.collect`` would send rows the driver already holds
+    through ``collectToPython`` and pickle). Every other method
+    (``count``, ``toPandas``, ``filter``, ``explain`` ...) runs on the
+    LocalRelation as for any DataFrame. Build one with :meth:`over`."""
+
+    @classmethod
+    def over(cls, df: DataFrame, names: list, rows: list) -> "ServedFrame":
+        """The served frame of ``df``, a LocalRelation holding exactly
+        ``rows`` (value tuples in ``names`` column order). ``rows`` is
+        kept, not copied: the caller must not mutate it."""
+        out = cls(df._jdf, df.sparkSession)
+        out._held, out._names, out._rows = rows, names, None
+        return out
+
+    def collect(self) -> list:
+        rows = self._rows
+        if rows is None:
+            # racing first calls build equal lists; either one is kept
+            make = Row(*self._names)
+            rows = self._rows = [make(*t) for t in self._held]
+        return list(rows)
 
 
 class PreparedQuery:
@@ -810,10 +844,11 @@ class PreparedQuery:
             list(self._empty_rows), self._schema
         )
 
-    def _local_df(self, rows: list) -> DataFrame:
-        """A LocalRelation over driver rows, built through Arrow: under
+    def _local_df(self, rows: list) -> "ServedFrame":
+        """A served frame over driver rows. Its LocalRelation is built
+        through Arrow: under
         ``spark.sql.execution.arrow.localRelationThreshold`` it plans as
-        a ``LocalTableScan``, and collecting it starts no Spark job (a
+        a ``LocalTableScan`` and runs with no Spark job (a
         ``createDataFrame`` from a Python list would parallelize the
         rows and run one)."""
         import pyarrow as pa
@@ -825,7 +860,10 @@ class PreparedQuery:
             [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
             schema=schema,
         )
-        return self._g.graph.spark.createDataFrame(tbl, self._schema)
+        return ServedFrame.over(
+            self._g.graph.spark.createDataFrame(tbl, self._schema),
+            self.columns, rows,
+        )
 
     def df(self, value: Any) -> DataFrame:
         """DataFrame form of :meth:`rows`, with the same out-of-domain

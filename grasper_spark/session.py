@@ -66,30 +66,36 @@ def default_driver_memory(mem_bytes: int | None = None) -> str:
     return f"{max(1, min(32, int(mem_bytes) // 2 // 2**30))}g"
 
 
-def get_spark(
+def session_builder(
     app_name: str = "grasper_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-) -> SparkSession:
+) -> SparkSession.Builder:
+    """A SparkSession builder with the engine's settings applied.
+    ``get_spark`` and ``tools/profile_query.py`` both build from it; a
+    caller may add overrides before ``getOrCreate()``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+    confs = [
         # Correctness: duckdb oracle timestamps are UTC-naive.
-        .config("spark.sql.session.timeZone", "UTC")
+        ("spark.sql.session.timeZone", "UTC"),
         # Scale: adaptive execution re-plans joins/partitions at runtime.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        ("spark.sql.adaptive.enabled", "true"),
+        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+        ("spark.sql.adaptive.skewJoin.enabled", "true"),
+        ("spark.sql.shuffle.partitions", str(shuffle_partitions)),
         # Arrow: vectorized transfer for the Pandas-UDF extension operators.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         # the driver's events.parquet stores TIMESTAMP(NANOS) — read as
         # long nanos and normalize in the loader (Spark has no nanos type).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        # Codegen: one pass of the OLAP templates generates ~110 classes,
+        # so Spark's default cache of 100 evicts a template's classes
+        # before it comes back and Janino recompiles them (a static
+        # conf: it must be set before the session starts).
+        ("spark.sql.codegen.cache.maxEntries", "2000"),
         # local-mode: this one JVM is the whole "cluster" — size its heap
         # like the sum of executors, not like a driver. With 8g, the
         # cached graph snapshot + persisted shingle relations from early
@@ -98,21 +104,32 @@ def get_spark(
         # half the host (up to 32g; see default_driver_memory). On a
         # real cluster this knob moves to executor memory and the
         # default driver size is fine.
-        .config(
+        (
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
-        )
+        ),
         # local-mode: shuffle/spill files on the virtual disk stall for
         # seconds under host I/O contention (observed 3-10× spikes on
         # shuffle-heavy queries); tmpfs makes them RAM-speed. Harmless
         # at test scale (shuffles ≪ RAM); on a real cluster local dirs
         # are NVMe and this fallback never fires.
-        .config("spark.local.dir", _local_dir())
+        ("spark.local.dir", _local_dir()),
         # Multi-client fairness: concurrent queries (emu mode, notebook
         # users) round-robin stages instead of FIFO-queueing behind a
         # long scan — the analogue of the reference master's per-client
         # scheduling (driver/master.hpp:70-115).
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.ui.enabled", "false")
-    )
-    return builder.getOrCreate()
+        ("spark.scheduler.mode", "FAIR"),
+        ("spark.ui.enabled", "false"),
+    ]
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for key, value in confs:
+        builder = builder.config(key, value)
+    return builder
+
+
+def get_spark(
+    app_name: str = "grasper_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession:
+    return session_builder(app_name, master, shuffle_partitions).getOrCreate()

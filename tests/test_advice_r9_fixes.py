@@ -7,6 +7,9 @@
 3. __spark_entry__._tbl — concurrent load lanes settle on one table
    handle per key (``setdefault``), so identity-keyed memos downstream
    see a single DataFrame.
+4. dedup.py — the pre-filter's corpus minimum and the id bounds are
+   kept with the persisted shingle relation, not with the threshold, so
+   callers alternating thresholds rebuild plans with no eager jobs.
 """
 
 import os
@@ -67,3 +70,47 @@ def test_tbl_cache_concurrent_callers_share_one_handle(spark, tmp_path):
         sys.setswitchinterval(old)
         entry._TBL_CACHE.pop(key, None)
     assert len(got) == 8 and all(df is got[0] for df in got)
+
+
+def _cold_dedup_caches():
+    from grasper_spark.functions import dedup as D
+
+    for slot in (D._SH_PERSISTED, D._SZ_PERSISTED):
+        while slot:
+            slot.pop()[1].unpersist()
+    for memo in (D._SH_ARGS_CACHE, D._OPS_CACHE):
+        memo.clear()
+    D._REL_SCALARS.clear()
+
+
+def test_alternating_thresholds_rerun_no_scalar_jobs(spark):
+    import uuid
+
+    from grasper_spark.functions import dedup as D
+
+    words = "a b c d e f g h i j k l".split()
+    # shifted windows: pairs share from 0 to 4 trigrams
+    rows = [(i, " ".join(words[i % 6: i % 6 + 6]) + f" x{i % 4}") for i in range(12)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def pairs(t):
+        return sorted(map(tuple, D.overlap_pair_stats(df, min_overlap_frac=t).collect()))
+
+    cold = {}
+    for t in (0.2, 0.5):
+        _cold_dedup_caches()
+        cold[t] = pairs(t)
+    assert cold[0.2] != cold[0.5]  # the thresholds differ in the pairs they keep
+
+    _cold_dedup_caches()
+    sc = spark.sparkContext
+    for t in (0.2, 0.5, 0.2):
+        gid = f"ops-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, gid)
+        try:
+            out = D.overlap_pair_stats(df, min_overlap_frac=t)
+        finally:
+            sc._jsc.clearJobGroup()
+        built_jobs = len(sc.statusTracker().getJobIdsForGroup(gid))
+        assert sorted(map(tuple, out.collect())) == cold[t], t
+    assert built_jobs == 0  # the third call, at 0.2 after 0.5

@@ -1,9 +1,10 @@
 """Ad-hoc stage-level profiler for one declared query (round-9 tuning).
 
-Builds the SAME session as grasper_spark.get_spark but with the Spark UI
-enabled, runs the query N times against the noop sink, then dumps the
-completed stages sorted by executor run time. CPU time is reported next
-to wall run time so host-noise windows (this sandbox drifts 2-8x) can be
+Builds the same session as grasper_spark.get_spark (one builder,
+``session.session_builder``) but with the Spark UI enabled, runs the
+query N times against the noop sink, then dumps the completed stages
+sorted by executor run time. CPU time is reported next to wall run time
+so host-noise windows (a shared host's wall clock drifts 2-8x) can be
 factored out.
 
 Usage: python tools/profile_query.py <query> [sf_dir] [passes]
@@ -21,24 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_spark():
-    from pyspark.sql import SparkSession
+    from grasper_spark.session import session_builder
 
-    from grasper_spark.session import _local_dir
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
-        SparkSession.builder.appName("profile-query")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        .config("spark.local.dir", _local_dir())
-        .config("spark.scheduler.mode", "FAIR")
+        session_builder("profile-query")
         .config("spark.ui.enabled", "true")
         .getOrCreate()
     )

@@ -1,10 +1,15 @@
 """spark.read.format("grasper") — Python DataSource connector over the
 reference's native text format (format spec docs/Tutorial.md:10-42)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 DATA = "/root/reference/data"
+if not os.path.isdir(DATA):
+    # the same modern graph, checked in (tests/data/README.md)
+    DATA = os.path.join(os.path.dirname(__file__), "data", "grasper_modern")
 
 
 @pytest.fixture(scope="module")

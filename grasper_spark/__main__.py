@@ -1,7 +1,7 @@
 """Console entry point — the Spark analogue of the reference client
-(/root/reference/driver/client.cpp:184-283 console loop).
+(Grasper's driver/client.cpp:184-283 console loop).
 
-    python -m grasper_spark --graph /root/reference/data -q 'g.V().count()'
+    python -m grasper_spark --graph tests/data/grasper_modern -q 'g.V().count()'
     python -m grasper_spark --tpch /root/testdata/sf0.001      # interactive
 
 Accepts the same three command families as the reference: Gremlin

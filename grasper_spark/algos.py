@@ -1,33 +1,31 @@
 """Iterative graph algorithms — the unbounded-`repeat` extension.
 
-The reference parses `repeat()` but executes it as a single-pass union
-(/root/reference/core/parser.cpp:1305-1318); these algorithms are the
-parity-plus path SURVEY.md §7 phase 4 calls for: a Pregel-style
-driver loop over DataFrames (PySpark has no GraphX binding — the
-message-passing pattern is expressed as join + groupBy per superstep,
-which is exactly what GraphX compiles to anyway).
+Grasper parses `repeat()` but executes it as a single-pass union
+(its core/parser.cpp); these algorithms are the parity-plus path
+SURVEY.md §7 phase 4 calls for: a Pregel-style driver loop over
+DataFrames (PySpark has no GraphX binding — the message-passing
+pattern is expressed as join + groupBy per superstep, which is
+exactly what GraphX compiles to anyway).
 
 Scale notes:
 - each superstep is one shuffle (join on dst + groupBy vid); frontiers
   shrink monotonically for BFS, so later supersteps are cheap.
-- `checkpoint_every` truncates the lineage with localCheckpoint. The
-  default is 1 (materialize every superstep): each superstep references
-  the previous state DataFrame 2-3 times (message join + dangling/union
-  branch), so between checkpoints the LOGICAL PLAN grows 2-3x per round
-  — Catalyst re-analyzes every copy, and the driver's planning time is
-  exponential in the checkpoint window (measured on a 6-vertex graph:
-  pagerank(iterations=15) at checkpoint_every=5 takes 278 s of pure
-  driver planning vs 6.5 s at 1, identical ranks to the last bit).
-  Batching supersteps into one job saves nothing anyway: the batched
-  job runs the same shuffles, so materializing per round only adds one
-  cheap |state|-row write while keeping the plan — and the driver —
-  flat. This is the same posture GraphX takes (per-iteration
-  materialization).
+- every superstep is materialized: `_iterate` (fixed-state loops),
+  `_bfs` (frontier loops) and `k_core`'s peel `localCheckpoint` each
+  round. A superstep references the previous state 2-3 times, so an
+  unmaterialized window grows the LOGICAL PLAN 2-3x per round and the
+  driver's planning time is exponential in the window (6-vertex graph,
+  pagerank(iterations=15): 278 s of planning with 5 rounds per
+  checkpoint vs 6.5 s with 1, identical ranks). Batching rounds saves
+  no shuffle, so a per-round |state|-row write keeps the plan flat —
+  GraphX's per-iteration materialization.
 - connected components uses large-star/small-star-ish min-label
   propagation; converges in O(log n) rounds on real graphs.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,10 +33,106 @@ from pyspark.sql import functions as F
 from grasper_spark.graph import PropertyGraph
 
 
-def _undirected(edges: DataFrame) -> DataFrame:
-    fwd = edges.select(F.col("src"), F.col("dst"))
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def _adjacency(edges: DataFrame, direction: str = "both", *cols) -> DataFrame:
+    """(src, dst, *cols) oriented for `direction`: 'out' keeps src→dst,
+    'in' reverses it, anything else ('both') is the union of the two."""
+    fwd = edges.select(F.col("src"), F.col("dst"), *cols)
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
+    if direction == "out":
+        return fwd
+    if direction == "in":
+        return rev
     return fwd.unionByName(rev)
+
+
+def _links(edges: DataFrame, direction: str = "both") -> DataFrame:
+    """Distinct (_s, _d) message routes — the join side of a superstep."""
+    return _adjacency(edges, direction).distinct().select(
+        F.col("src").alias("_s"), F.col("dst").alias("_d")
+    )
+
+
+def _iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+) -> DataFrame:
+    """The fixed-state superstep loop: `state = step(state, round)`,
+    materialized every round, for up to `rounds` rounds. `converged(old,
+    new)` only compares two materialized rounds (a cheap join of
+    checkpoints), never the unmaterialized input state."""
+    prev = None
+    for i in range(rounds):
+        state = step(state, i).localCheckpoint(eager=True)
+        if converged is not None and prev is not None and converged(prev, state):
+            break
+        prev = state
+    return state
+
+
+def _bfs(
+    adj: DataFrame, visited: DataFrame, keys: list[str], max_hops: int
+) -> DataFrame:
+    """Frontier/anti-join BFS over `adj` (_s, _d) from `visited` (*keys,
+    vid, dist=0): each hop expands the last frontier and drops (*keys,
+    vid) pairs already visited; stops at the first empty frontier."""
+    frontier = visited
+    for hop in range(1, max_hops + 1):
+        # qualified aliases: frontier derives from adj after hop 1, so an
+        # unqualified join would trip AMBIGUOUS_SELF_JOIN
+        nxt = (
+            frontier.alias("f")
+            .join(adj.alias("a"), F.col("f.vid") == F.col("a._s"), "inner")
+            .select(*[f"f.{k}" for k in keys], F.col("a._d").alias("vid"))
+            .distinct()
+            .join(visited.select(*keys, "vid"), [*keys, "vid"], "left_anti")
+            .withColumn("dist", F.lit(hop))
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        visited = visited.unionByName(nxt)
+        frontier = nxt
+    return visited
+
+
+def _power_iteration(
+    graph: PropertyGraph, ranks: DataFrame, iterations: int,
+    contrib: Column, update: Column, zero,
+) -> DataFrame:
+    """`iterations` power steps from `ranks` (vid, <rank>): every edge
+    carries `contrib` (over r.<rank>, r.deg), summed per dst as `in_sum`;
+    the dangling mass `_dang` is a 1-row aggregate broadcast-crossJoined
+    into `update` (the next rank), so a step is one Spark job with no
+    driver round-trip. `zero` is the rank type's zero."""
+    rank = ranks.columns[1]
+    v = graph.vertices.select("vid")
+    out_deg = graph.edges.groupBy(F.col("src").alias("vid")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    edges = graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        contribs = (
+            ranks.join(out_deg, "vid", "inner").alias("r")
+            .join(edges.alias("e"), F.col("r.vid") == F.col("e._s"), "inner")
+            .select(F.col("e._d").alias("vid"), contrib.alias("c"))
+            .groupBy("vid")
+            .agg(F.sum("c").alias("in_sum"))
+        )
+        dangling = (
+            ranks.join(out_deg, "vid", "left_anti")
+            .agg(F.coalesce(F.sum(rank), F.lit(zero)).alias("_dang"))
+        )
+        return (
+            v.join(contribs, "vid", "left")
+            .na.fill({"in_sum": zero})
+            .crossJoin(F.broadcast(dangling))
+            .select("vid", update.alias(rank))
+        )
+
+    return _iterate(ranks, step, iterations)
 
 
 def bfs_distances(
@@ -47,7 +141,6 @@ def bfs_distances(
     max_hops: int = 10,
     direction: str = "out",
     edge_label: str | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Multi-source BFS: (vid, dist) for every vertex reachable from
     `sources` (a DataFrame with a `vid` column) within max_hops.
@@ -57,76 +150,37 @@ def bfs_distances(
     e = graph.edges
     if edge_label is not None:
         e = e.filter(F.col("label") == edge_label)
-    if direction == "out":
-        adj = e.select("src", "dst")
-    elif direction == "in":
-        adj = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    else:
-        adj = _undirected(e)
-    adj = adj.distinct()
-
-    adj = adj.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
     visited = sources.select("vid").distinct().withColumn("dist", F.lit(0))
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        # qualified aliases: frontier derives from adj after hop 1, so an
-        # unqualified join would trip AMBIGUOUS_SELF_JOIN
-        nxt = (
-            frontier.alias("f")
-            .join(adj.alias("a"), F.col("f.vid") == F.col("a._s"), "inner")
-            .select(F.col("a._d").alias("vid"))
-            .distinct()
-            .join(visited.select("vid"), "vid", "left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        if hop % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+    return _bfs(_links(e, direction), visited, [], max_hops)
 
 
-def connected_components(
-    graph: PropertyGraph, max_iter: int = 20, checkpoint_every: int = 1
-) -> DataFrame:
+def connected_components(graph: PropertyGraph, max_iter: int = 20) -> DataFrame:
     """(vid, component) — undirected connected components by iterative
     min-id propagation; component = smallest vid in the component."""
-    adj = _undirected(graph.edges).distinct().select(
-        F.col("src").alias("_s"), F.col("dst").alias("_d")
-    )
-    labels = graph.vertices.select("vid").withColumn("component", F.col("vid"))
-    # convergence is checked checkpoint-to-checkpoint, not per round: a
-    # per-round isEmpty() is a whole extra job each superstep, while
-    # min-label propagation is monotone, so "no change across
-    # checkpoint_every rounds" ⇔ converged — and both sides of that
-    # comparison are already-materialized checkpoints (cheap join).
-    last_ck = None
-    for i in range(max_iter):
+    adj = _links(graph.edges)
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         # each vertex adopts min(own, neighbors') component label
         msgs = (
             labels.alias("l")
             .join(adj.alias("a"), F.col("l.vid") == F.col("a._s"), "inner")
             .select(F.col("a._d").alias("vid"), F.col("l.component").alias("component"))
         )
-        labels = (
-            labels.unionByName(msgs)
-            .groupBy("vid")
-            .agg(F.min("component").alias("component"))
+        return labels.unionByName(msgs).groupBy("vid").agg(
+            F.min("component").alias("component")
         )
-        if (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
-            if last_ck is not None:
-                changed = (
-                    labels.alias("n")
-                    .join(last_ck.alias("o"), "vid")
-                    .filter(F.col("n.component") != F.col("o.component"))
-                )
-                if changed.isEmpty():
-                    break
-            last_ck = labels
-    return labels
+
+    def converged(old: DataFrame, new: DataFrame) -> bool:
+        # min-label propagation is monotone: one unchanged round ⇔ done
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "vid")
+            .filter(F.col("n.component") != F.col("o.component"))
+            .isEmpty()
+        )
+
+    labels = graph.vertices.select("vid").withColumn("component", F.col("vid"))
+    return _iterate(labels, step, max_iter, converged)
 
 
 def triangle_count(graph: PropertyGraph) -> DataFrame:
@@ -147,7 +201,7 @@ def triangle_count(graph: PropertyGraph) -> DataFrame:
     BASELINE Table 3). Degree ordering bounds Σ outdeg² by O(m^1.5)
     regardless of skew; no salting needed because the orientation itself
     removes the hot key."""
-    e = _undirected(graph.edges).distinct()  # both directions present
+    e = _adjacency(graph.edges).distinct()  # both directions present
     deg = e.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -164,76 +218,40 @@ def triangle_count(graph: PropertyGraph) -> DataFrame:
     dir_e = withd.filter(
         F.struct(F.col("ds"), F.col("src")) < F.struct(F.col("dd"), F.col("dst"))
     ).select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    ab = dir_e
     bc = dir_e.select(F.col("a").alias("b"), F.col("b").alias("c"))
     ac = dir_e.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
     tri = (
-        ab.join(bc, "b")
+        dir_e.join(bc, "b")
         .join(ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")), "inner")
     )
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def pagerank(
-    graph: PropertyGraph,
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 1,
+    graph: PropertyGraph, iterations: int = 10, damping: float = 0.85
 ) -> DataFrame:
     """(vid, rank) after `iterations` power steps; ranks sum to ~|V|.
     Dangling mass is redistributed uniformly each step.
 
-    The dangling-mass scalar stays IN the plan: a 1-row aggregate
-    broadcast-crossJoined into the rank update, so each iteration is one
-    Spark job with no driver round-trip (the |V| count is the only
-    driver-side scalar, computed once)."""
+    The dangling-mass scalar stays IN the plan (see `_power_iteration`),
+    so each iteration is one Spark job with no driver round-trip (the
+    |V| count is the only driver-side scalar, computed once)."""
     v = graph.vertices.select("vid")
     n = v.count()
-    out_deg = graph.edges.groupBy(F.col("src").alias("vid")).agg(
-        F.count(F.lit(1)).alias("deg")
+    return _power_iteration(
+        graph,
+        v.withColumn("rank", F.lit(1.0)),
+        iterations,
+        contrib=F.col("r.rank") / F.col("r.deg"),
+        update=F.lit(1 - damping)
+        + F.lit(damping) * (F.col("in_sum") + F.col("_dang") / F.lit(float(n))),
+        zero=0.0,
     )
-    ranks = v.withColumn("rank", F.lit(1.0))
-    edges = graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
-    for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "vid", "inner").alias("r")
-            .join(edges.alias("e"), F.col("r.vid") == F.col("e._s"), "inner")
-            .select(
-                F.col("e._d").alias("vid"),
-                (F.col("r.rank") / F.col("r.deg")).alias("c"),
-            )
-            .groupBy("vid")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        dangling = (
-            ranks.join(out_deg, "vid", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        ranks = (
-            v.join(contribs, "vid", "left")
-            .na.fill({"in_sum": 0.0})
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vid",
-                (
-                    F.lit(1 - damping)
-                    + F.lit(damping)
-                    * (F.col("in_sum") + F.col("_dang") / F.lit(float(n)))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
 
 
 def pagerank_qint(
-    graph: PropertyGraph,
-    iterations: int = 10,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = 10**9,
-    checkpoint_every: int = 1,
+    graph: PropertyGraph, iterations: int = 10,
+    damping_num: int = 17, damping_den: int = 20, scale: int = 10**9,
 ) -> DataFrame:
     """Integer-exact PageRank for exact-compare gates: ranks are int64
     nano-units (`scale` per initial unit) and every step is pure integer
@@ -257,109 +275,55 @@ def pagerank_qint(
             f"pagerank_qint: |V|·scale·num = {n * scale * damping_num} "
             f"risks int64 overflow — lower the scale"
         )
-    out_deg = graph.edges.groupBy(F.col("src").alias("vid")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    ranks = v.withColumn("rank_q", F.lit(scale).cast("long"))
-    edges = graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
     base = ((damping_den - damping_num) * scale) // damping_den
-    for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "vid", "inner").alias("r")
-            .join(edges.alias("e"), F.col("r.vid") == F.col("e._s"), "inner")
-            .select(
-                F.col("e._d").alias("vid"),
-                F.expr("rank_q div deg").alias("c"),
-            )
-            .groupBy("vid")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        dangling = (
-            ranks.join(out_deg, "vid", "left_anti")
-            .agg(F.coalesce(F.sum("rank_q"), F.lit(0).cast("long")).alias("_dang"))
-        )
-        ranks = (
-            v.join(contribs, "vid", "left")
-            .na.fill({"in_sum": 0})
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vid",
-                F.expr(
-                    f"{base} + ({damping_num} * (in_sum + _dang div {n})) "
-                    f"div {damping_den}"
-                ).cast("long").alias("rank_q"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return _power_iteration(
+        graph,
+        v.withColumn("rank_q", F.lit(scale).cast("long")),
+        iterations,
+        contrib=F.expr("rank_q div deg"),
+        update=F.expr(
+            f"{base} + ({damping_num} * (in_sum + _dang div {n})) div {damping_den}"
+        ).cast("long"),
+        zero=0,
+    )
 
 
 def personalized_pagerank(
-    graph: PropertyGraph,
-    seeds: list[int],
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 1,
+    graph: PropertyGraph, seeds: list[int], iterations: int = 10, damping: float = 0.85
 ) -> DataFrame:
     """(vid, rank) — PageRank with the teleport restricted to `seeds`:
     rank(v) = (1-d)·1[v∈S]/|S| + d·(Σ in-contribs + dangling/|S|·1[v∈S]).
     The standard proximity / recommendation score ("PPR from this
     user"); ranks sum to ~1 and concentrate around the seed set.
 
-    Same superstep shape as `pagerank` — one join + one aggregate per
-    iteration, the dangling-mass scalar rides the plan as a broadcast
-    1-row crossJoin (no driver round-trip), lineage truncated by
-    localCheckpoint. The seed set is a literal isin filter, so the
-    teleport term costs no join."""
+    Duplicate seeds count once; a seed that is not a vertex raises
+    ValueError (it would take a teleport share no vertex receives, so
+    the ranks would no longer sum to 1). Same superstep shape as
+    `pagerank`; the seed set is a literal isin filter, so the teleport
+    term costs no join."""
+    seeds = list(dict.fromkeys(seeds))
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     v = graph.vertices.select("vid")
+    is_seed = F.col("vid").isin(seeds)
+    present = {r.vid for r in v.filter(is_seed).collect()}
+    missing = [s for s in seeds if s not in present]
+    if missing:
+        raise ValueError(f"personalized_pagerank: seeds not in the graph: {missing}")
     s = float(len(seeds))
-    is_seed = F.col("vid").isin(list(seeds))
-    out_deg = graph.edges.groupBy(F.col("src").alias("vid")).agg(
-        F.count(F.lit(1)).alias("deg")
+    return _power_iteration(
+        graph,
+        v.withColumn("rank", F.when(is_seed, F.lit(1.0 / s)).otherwise(F.lit(0.0))),
+        iterations,
+        contrib=F.col("r.rank") / F.col("r.deg"),
+        update=F.when(is_seed, F.lit((1 - damping) / s)).otherwise(F.lit(0.0))
+        + F.lit(damping)
+        * (
+            F.col("in_sum")
+            + F.when(is_seed, F.col("_dang") / F.lit(s)).otherwise(F.lit(0.0))
+        ),
+        zero=0.0,
     )
-    ranks = v.withColumn(
-        "rank", F.when(is_seed, F.lit(1.0 / s)).otherwise(F.lit(0.0))
-    )
-    edges = graph.edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
-    for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "vid", "inner").alias("r")
-            .join(edges.alias("e"), F.col("r.vid") == F.col("e._s"), "inner")
-            .select(
-                F.col("e._d").alias("vid"),
-                (F.col("r.rank") / F.col("r.deg")).alias("c"),
-            )
-            .groupBy("vid")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        dangling = (
-            ranks.join(out_deg, "vid", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        ranks = (
-            v.join(contribs, "vid", "left")
-            .na.fill({"in_sum": 0.0})
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vid",
-                (
-                    F.when(is_seed, F.lit((1 - damping) / s)).otherwise(F.lit(0.0))
-                    + F.lit(damping)
-                    * (
-                        F.col("in_sum")
-                        + F.when(is_seed, F.col("_dang") / F.lit(s)).otherwise(
-                            F.lit(0.0)
-                        )
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
 
 
 def sssp(
@@ -368,7 +332,6 @@ def sssp(
     rounds: int = 4,
     direction: str = "both",
     weight: Column | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Weighted single/multi-source shortest paths, Bellman-Ford style:
     (vid, dist) where dist is the minimum total weight over paths of at
@@ -379,25 +342,15 @@ def sssp(
     Scale: no priority queue — each round is one frontier×edges
     equi-join plus one min-groupBy (partial aggregation map-side), the
     data-parallel trade a cluster wants over Dijkstra's sequential
-    queue; lineage truncates every `checkpoint_every` rounds. Results
-    are deterministic: each candidate distance is a fixed-order sum
-    along its path and min() is order-insensitive.
+    queue. Results are deterministic: each candidate distance is a
+    fixed-order sum along its path and min() is order-insensitive.
     """
-    e = graph.edges
     w = (weight if weight is not None else F.lit(1.0)).cast("double")
-    fwd = e.select(F.col("src").alias("_s"), F.col("dst").alias("_d"), w.alias("_w"))
-    if direction == "out":
-        adj = fwd
-    elif direction == "in":
-        adj = e.select(
-            F.col("dst").alias("_s"), F.col("src").alias("_d"), w.alias("_w")
-        )
-    else:
-        adj = fwd.unionByName(
-            e.select(F.col("dst").alias("_s"), F.col("src").alias("_d"), w.alias("_w"))
-        )
-    dists = sources.select("vid").distinct().withColumn("dist", F.lit(0.0))
-    for i in range(1, rounds + 1):
+    adj = _adjacency(graph.edges, direction, w.alias("_w")).select(
+        F.col("src").alias("_s"), F.col("dst").alias("_d"), "_w"
+    )
+
+    def step(dists: DataFrame, _: int) -> DataFrame:
         relaxed = (
             dists.alias("r")
             .join(adj.alias("a"), F.col("r.vid") == F.col("a._s"), "inner")
@@ -406,18 +359,15 @@ def sssp(
                 (F.col("r.dist") + F.col("a._w")).alias("dist"),
             )
         )
-        dists = (
+        return (
             dists.unionByName(relaxed).groupBy("vid").agg(F.min("dist").alias("dist"))
         )
-        if i % checkpoint_every == 0:
-            dists = dists.localCheckpoint(eager=True)
-    return dists
+
+    dists = sources.select("vid").distinct().withColumn("dist", F.lit(0.0))
+    return _iterate(dists, step, rounds)
 
 
-def k_core(
-    graph: PropertyGraph, k: int = 2, max_iter: int = 20,
-    checkpoint_every: int = 1,
-) -> DataFrame:
+def k_core(graph: PropertyGraph, k: int = 2, max_iter: int = 20) -> DataFrame:
     """The k-core: iteratively peel vertices whose undirected degree is
     < k until none remain; returns (vid, degree) of survivors with their
     within-core degree. Peeling is monotone — once converged, extra
@@ -427,19 +377,14 @@ def k_core(
     Scale: each round is one degree groupBy (partial agg) + two
     semi-joins to drop edges touching peeled vertices; the edge set only
     shrinks. Convergence = surviving-vertex count stable (a count() per
-    round on the already-aggregated degree relation — cheap, and the
-    relation is checkpointed every few rounds to truncate lineage)."""
-    adj = _undirected(graph.edges).distinct().select(
-        F.col("src").alias("_s"), F.col("dst").alias("_d")
-    )
-    prev_n = None
-    deg = None
-    for i in range(max_iter):
+    round on the already-aggregated degree relation — cheap). Both
+    relations are materialized every round."""
+    adj = _links(graph.edges)
+    prev_n = deg = None
+    for _ in range(max_iter):
         deg = adj.groupBy("_s").agg(F.count(F.lit(1)).alias("degree")).filter(
             F.col("degree") >= k
-        )
-        if (i + 1) % checkpoint_every == 0:
-            deg = deg.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         n = deg.count()
         if n == prev_n or n == 0:
             break
@@ -448,9 +393,8 @@ def k_core(
         adj = (
             adj.join(keep, "_s", "left_semi")
             .join(keep.withColumnRenamed("_s", "_d"), "_d", "left_semi")
+            .localCheckpoint(eager=True)
         )
-        if (i + 1) % checkpoint_every == 0:
-            adj = adj.localCheckpoint(eager=True)
     return deg.select(F.col("_s").alias("vid"), "degree")
 
 
@@ -467,14 +411,9 @@ def degree_distribution(
     e = graph.edges
     if edge_label is not None:
         e = e.filter(F.col("label") == edge_label)
-    if direction == "out":
-        key = F.col("src")
-    elif direction == "in":
-        key = F.col("dst")
-    else:
-        e = _undirected(e)
-        key = F.col("src")
-    deg = e.groupBy(key.alias("vid")).agg(F.count(F.lit(1)).alias("degree"))
+    deg = _adjacency(e, direction).groupBy(F.col("src").alias("vid")).agg(
+        F.count(F.lit(1)).alias("degree")
+    )
     with_zero = (
         graph.vertices.select("vid")
         .join(deg, "vid", "left")
@@ -489,7 +428,6 @@ def random_walks(
     walks_per_vertex: int = 1,
     seed: int = 42,
     direction: str = "out",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Deterministic pseudo-random walks (DeepWalk/GraphSAGE sampling):
     (walk_id, start_vid, path array<vid>). Each step picks the neighbor
@@ -500,23 +438,45 @@ def random_walks(
 
     Scale: one equi-join + one ranked-neighbor pick per step (the
     neighbor rank is a window per source vertex, computed ONCE and
-    reused across all steps); lineage truncates every few steps. Output
-    is walks_per_vertex × |V| rows with arrays of ≤ walk_length+1 vids.
+    reused across all steps). Output is walks_per_vertex × |V| rows
+    with arrays of ≤ walk_length+1 vids.
     """
-    e = graph.edges
-    if direction == "out":
-        adj = e.select("src", "dst")
-    elif direction == "in":
-        adj = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    else:
-        adj = _undirected(e)
-    adj = adj.distinct()
+    adj = _adjacency(graph.edges, direction).distinct()
     w = Window.partitionBy("src").orderBy("dst")
     ranked = (
         adj.withColumn("_rk", F.row_number().over(w) - 1)
         .withColumn("_deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
         .localCheckpoint(eager=True)
     )
+
+    def step(walks: DataFrame, i: int) -> DataFrame:
+        # done walks must NOT re-enter the join (a done row joined
+        # against its vertex's ranked neighbors would fan out by degree)
+        active = walks.filter(~F.col("_done"))
+        done = walks.filter(F.col("_done"))
+        stepped = (
+            active.alias("wk")
+            .join(ranked.alias("r"), F.col("wk._cur") == F.col("r.src"), "left")
+            .filter(
+                F.col("r.src").isNull()  # sink: stop early
+                | (
+                    F.col("r._rk")
+                    == F.pmod(
+                        F.xxhash64(F.lit(seed), F.col("wk.walk_id"), F.lit(i)),
+                        F.col("r._deg"),
+                    )
+                )
+            )
+            .select(
+                "wk.walk_id", "wk.start_vid",
+                F.when(F.col("r.dst").isNull(), F.col("wk.path"))
+                .otherwise(F.array_append("wk.path", F.col("r.dst"))).alias("path"),
+                F.coalesce(F.col("r.dst"), F.col("wk._cur")).alias("_cur"),
+                F.col("r.dst").isNull().alias("_done"),
+            )
+        )
+        return stepped.unionByName(done)
+
     walks = (
         graph.vertices.select("vid")
         .crossJoin(F.broadcast(
@@ -532,36 +492,7 @@ def random_walks(
             F.lit(False).alias("_done"),
         )
     )
-    for step in range(walk_length):
-        # done walks must NOT re-enter the join (a done row joined
-        # against its vertex's ranked neighbors would fan out by degree)
-        active = walks.filter(~F.col("_done"))
-        done = walks.filter(F.col("_done"))
-        stepped = (
-            active.alias("wk")
-            .join(ranked.alias("r"), F.col("wk._cur") == F.col("r.src"), "left")
-            .filter(
-                F.col("r.src").isNull()  # sink: stop early
-                | (
-                    F.col("r._rk")
-                    == F.pmod(
-                        F.xxhash64(F.lit(seed), F.col("wk.walk_id"), F.lit(step)),
-                        F.col("r._deg"),
-                    )
-                )
-            )
-            .select(
-                "wk.walk_id", "wk.start_vid",
-                F.when(F.col("r.dst").isNull(), F.col("wk.path"))
-                .otherwise(F.array_append("wk.path", F.col("r.dst"))).alias("path"),
-                F.coalesce(F.col("r.dst"), F.col("wk._cur")).alias("_cur"),
-                F.col("r.dst").isNull().alias("_done"),
-            )
-        )
-        walks = stepped.unionByName(done)
-        if (step + 1) % checkpoint_every == 0:
-            walks = walks.localCheckpoint(eager=True)
-    return walks.select("walk_id", "start_vid", "path")
+    return _iterate(walks, step, walk_length).select("walk_id", "start_vid", "path")
 
 
 def walk_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -594,7 +525,6 @@ def harmonic_centrality(
     n_seeds: int = 16,
     max_hops: int = 6,
     direction: str = "both",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Approximate harmonic centrality by sampled multi-source BFS
     (Eppstein–Wang): pick `n_seeds` deterministic seeds (md5-ranked —
@@ -605,16 +535,8 @@ def harmonic_centrality(
 
     Scale: state is (seed × reached vertex) pairs — n_seeds bounds the
     blow-up factor over plain BFS; each hop is one equi-join + one
-    anti-join, lineage checkpointed. Returns (vid, harmonic, reached).
+    anti-join. Returns (vid, harmonic, reached).
     """
-    e = graph.edges
-    if direction == "out":
-        adj = e.select("src", "dst")
-    elif direction == "in":
-        adj = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    else:
-        adj = _undirected(e)
-    adj = adj.distinct().select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
     seeds = (
         graph.vertices.select("vid")
         .orderBy(F.md5(F.col("vid").cast("string")), F.col("vid"))
@@ -624,24 +546,9 @@ def harmonic_centrality(
     visited = seeds.select("_seed", F.col("_seed").alias("vid")).withColumn(
         "dist", F.lit(0)
     ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.alias("f")
-            .join(adj.alias("a"), F.col("f.vid") == F.col("a._s"), "inner")
-            .select("f._seed", F.col("a._d").alias("vid"))
-            .distinct()
-            .join(visited.select("_seed", "vid"), ["_seed", "vid"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        if hop % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
     return (
-        visited.filter(F.col("dist") > 0)
+        _bfs(_links(graph.edges, direction), visited, ["_seed"], max_hops)
+        .filter(F.col("dist") > 0)
         .groupBy("vid")
         .agg(
             F.round(F.sum(1.0 / F.col("dist")), 6).alias("harmonic"),
@@ -650,9 +557,7 @@ def harmonic_centrality(
     )
 
 
-def label_propagation(
-    graph: PropertyGraph, max_iter: int = 10, checkpoint_every: int = 1
-) -> DataFrame:
+def label_propagation(graph: PropertyGraph, max_iter: int = 10) -> DataFrame:
     """(vid, community) — semi-synchronous label propagation (LPA,
     Raghavan et al. 2007) over the undirected edge set.
 
@@ -663,15 +568,13 @@ def label_propagation(
     vertex-order dependence.
 
     Scale shape: one shuffle per round (edge join + (vid,label) count +
-    per-vid arg-max), identical to the CC superstep; lineage is
-    truncated with localCheckpoint every `checkpoint_every` rounds.
-    Isolated vertices keep their own vid as community.
+    per-vid arg-max), identical to the CC superstep. Isolated vertices
+    keep their own vid as community.
     """
-    adj = _undirected(graph.edges).distinct().select(
-        F.col("src").alias("_s"), F.col("dst").alias("_d")
-    )
-    labels = graph.vertices.select("vid").withColumn("community", F.col("vid"))
-    for i in range(max_iter):
+    adj = _links(graph.edges)
+    w = Window.partitionBy("vid").orderBy(F.desc("_n"), F.asc("community"))
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             labels.alias("l")
             .join(adj.alias("a"), F.col("l.vid") == F.col("a._s"), "inner")
@@ -680,21 +583,17 @@ def label_propagation(
             .groupBy("vid", "community")
             .agg(F.count(F.lit(1)).alias("_n"))
         )
-        w = Window.partitionBy("vid").orderBy(F.desc("_n"), F.asc("community"))
         winners = (
             votes.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1)
             .select("vid", F.col("community").alias("_new"))
         )
-        labels = (
-            labels.join(winners, "vid", "left")
-            .select(
-                "vid", F.coalesce(F.col("_new"), F.col("community")).alias("community")
-            )
+        return labels.join(winners, "vid", "left").select(
+            "vid", F.coalesce(F.col("_new"), F.col("community")).alias("community")
         )
-        if (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+
+    labels = graph.vertices.select("vid").withColumn("community", F.col("vid"))
+    return _iterate(labels, step, max_iter)
 
 
 def common_neighbors(
@@ -712,7 +611,7 @@ def common_neighbors(
     (their pair fan-out, not their own candidacy) — the hot-shingle cap
     in graph form.
     """
-    adj = _undirected(graph.edges).distinct().select(
+    adj = _adjacency(graph.edges).distinct().select(
         F.col("src").alias("v"), F.col("dst").alias("n")
     )
     # the adjacency feeds SIX roles below (deg, hub filter, both pair

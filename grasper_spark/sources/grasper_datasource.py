@@ -17,8 +17,8 @@ Tables (`.option("table", ...)`):
   (the topology files the JVM loader skips — exposed here so the raw
   adjacency is scannable too, isolated vertices included)
 
-Format spec: /root/reference/docs/Tutorial.md:10-42; type codes
-/root/reference/base/type.hpp:307-313 (1=int 2=double 3=char 4=string
+Format spec: Grasper's docs/Tutorial.md:10-42; type codes
+Grasper's base/type.hpp:307-313 (1=int 2=double 3=char 4=string
 5=uint64, 16|t = tab-joined collection of t).
 
 Scale design: partitions() plans ONE InputPartition PER part_* FILE

@@ -1,16 +1,16 @@
 """Loader for Grasper's native HDFS text format.
 
-Format spec (/root/reference/docs/Tutorial.md:10-42), loaded by the
-reference in /root/reference/storage/data_store.cpp:41-268:
+Format spec (Grasper's docs/Tutorial.md:10-42), loaded by Grasper's
+storage/data_store.cpp:41-268:
 
-- ``vertices/part_*``:      ``{vid}\\t{num_in}\\t{in1 in2 ..}\\t{num_out}\\t{out1 ..}``
+- ``vertices/part_*``:      ``{vid}\\t{num_in}\\t{in1 in2 ..} {num_out}\\t{out1 ..}``
 - ``vtx_property/part_*``:  ``{vid}\\t{label_id}\\t[{pid}:{val},...]``
 - ``edge_property/part_*``: ``{src_vid}\\t{dst_vid}\\t{label_id}\\t[{pid}:{val},...]``
 - ``index/vtx_label`` / ``edge_label``: ``{label_string}\\t{label_id}``
 - ``index/vtx_property_index`` / ``edge_property_index``:
   ``{key}\\t{pid}\\t{type_code}`` with type codes 1=int 2=double 3=char
-  4=string (/root/reference/base/type.hpp:307-313,
-  /root/reference/utils/tool.hpp:159-177).
+  4=string (Grasper's base/type.hpp:307-313 and
+  utils/tool.hpp:159-177).
 
 Note on direction: Tutorial.md's edge_property line is
 ``{in_vid}\\t{out_vid}``, but in the shipped sample data the first field

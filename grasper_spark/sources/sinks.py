@@ -326,7 +326,9 @@ def write_grasper_text(graph: PropertyGraph, out_dir: str) -> None:
         os.path.join(out_dir, "edge_property"),
     )
 
-    # adjacency lists: {vid}\t{num_in}\t{in..}\t{num_out}\t{out..} —
+    # adjacency lists: {vid}\t{num_in}\t{in..} {num_out}\t{out..} —
+    # a space, not a tab, ends the in-list (the data source's adjacency
+    # reader and Grasper's sample data both use this layout);
     # two partial-aggregated groupBys keyed by vid (the per-line fanout
     # the format itself mandates), left-joined onto the vid universe so
     # isolated vertices still get a line
@@ -345,8 +347,13 @@ def write_grasper_text(graph: PropertyGraph, out_dir: str) -> None:
             F.concat(
                 F.col("vid").cast("string"),
                 tab, F.size(F.coalesce("_ins", empty)).cast("string"),
-                tab, F.array_join(F.coalesce("_ins", empty).cast("array<string>"), " "),
-                tab, F.size(F.coalesce("_outs", empty)).cast("string"),
+                tab, F.array_join(
+                    F.concat(
+                        F.coalesce("_ins", empty).cast("array<string>"),
+                        F.array(F.size(F.coalesce("_outs", empty)).cast("string")),
+                    ),
+                    " ",
+                ),
                 tab, F.array_join(F.coalesce("_outs", empty).cast("array<string>"), " "),
             ).alias("value")
         )

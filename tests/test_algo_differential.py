@@ -41,11 +41,15 @@ def _mk(spark, vids, edges, weights):
     return PropertyGraph(v, e)
 
 
-def _undirected_adj(vids, edges):
+def _oriented_adj(vids, edges, direction):
+    """vid -> neighbor set following `direction` ('out' src→dst, 'in'
+    dst→src, 'both' either way)."""
     adj = {v: set() for v in vids}
     for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
+        if direction != "in":
+            adj[a].add(b)
+        if direction != "out":
+            adj[b].add(a)
     return adj
 
 
@@ -59,14 +63,18 @@ TIERED_SEEDS = [
 ]
 
 
+DIRECTIONS = ["out", "in", "both"]
+
+
 @pytest.mark.parametrize("seed", TIERED_SEEDS)
-def test_bfs_matches_python(spark, seed):
+@pytest.mark.parametrize("direction", DIRECTIONS)
+def test_bfs_matches_python(spark, direction, seed):
     vids, edges, weights = _random_graph(seed)
     g = _mk(spark, vids, edges, weights)
     src = spark.createDataFrame([(vids[0],)], "vid long")
     got = {r.vid: r.dist for r in
-           bfs_distances(g, src, max_hops=10, direction="both").collect()}
-    adj = _undirected_adj(vids, edges)
+           bfs_distances(g, src, max_hops=10, direction=direction).collect()}
+    adj = _oriented_adj(vids, edges, direction)
     want, q = {vids[0]: 0}, deque([vids[0]])
     while q:
         u = q.popleft()
@@ -82,7 +90,7 @@ def test_connected_components_match_python(spark, seed):
     vids, edges, weights = _random_graph(seed, m=18)  # sparse → several comps
     g = _mk(spark, vids, edges, weights)
     got = {r.vid: r.component for r in connected_components(g).collect()}
-    adj = _undirected_adj(vids, edges)
+    adj = _oriented_adj(vids, edges, "both")
     want = {}
     for v in vids:
         if v in want:
@@ -104,19 +112,22 @@ def test_connected_components_match_python(spark, seed):
 
 
 @pytest.mark.parametrize("seed", TIERED_SEEDS)
-def test_sssp_matches_dijkstra(spark, seed):
+@pytest.mark.parametrize("direction", DIRECTIONS)
+def test_sssp_matches_dijkstra(spark, direction, seed):
     import heapq
 
     vids, edges, weights = _random_graph(seed)
     g = _mk(spark, vids, edges, weights)
     src = spark.createDataFrame([(vids[0],)], "vid long")
     got = {r.vid: r.dist for r in
-           sssp(g, src, rounds=30, direction="both",
+           sssp(g, src, rounds=30, direction=direction,
                 weight=F.col("w")).collect()}
     wadj = {v: [] for v in vids}
     for (a, b), w in weights.items():
-        wadj[a].append((b, w))
-        wadj[b].append((a, w))
+        if direction != "in":
+            wadj[a].append((b, w))
+        if direction != "out":
+            wadj[b].append((a, w))
     want, pq = {}, [(0.0, vids[0])]
     while pq:
         d, u = heapq.heappop(pq)
@@ -134,7 +145,7 @@ def test_triangles_match_python(spark, seed):
     vids, edges, weights = _random_graph(seed, m=60)
     g = _mk(spark, vids, edges, weights)
     got = triangle_count(g).first()[0]
-    adj = _undirected_adj(vids, edges)
+    adj = _oriented_adj(vids, edges, "both")
     want = sum(
         1
         for a in vids
@@ -149,7 +160,7 @@ def test_k_core_matches_python(spark, seed):
     vids, edges, weights = _random_graph(seed, m=50)
     g = _mk(spark, vids, edges, weights)
     got = {r.vid: r.degree for r in k_core(g, k=3).collect()}
-    adj = _undirected_adj(vids, edges)
+    adj = _oriented_adj(vids, edges, "both")
     alive = set(vids)
     changed = True
     while changed:
@@ -200,6 +211,34 @@ def test_pagerank_matches_python_power_iteration(spark, seed):
 
 
 @pytest.mark.parametrize("seed", TIERED_SEEDS[:2])
+def test_personalized_pagerank_matches_python_power_iteration(spark, seed):
+    from grasper_spark.algos import personalized_pagerank
+
+    vids, edges, weights = _random_graph(seed, m=35)
+    g = _mk(spark, vids, edges, weights)
+    seeds = vids[:3]
+    got = {r.vid: r.rank for r in
+           personalized_pagerank(g, seeds, iterations=8).collect()}
+    out = {v: [] for v in vids}
+    for a, b in edges:
+        out[a].append(b)
+    d, s = 0.85, len(seeds)
+    tele = {v: (1.0 / s if v in seeds else 0.0) for v in vids}
+    rank = dict(tele)
+    for _ in range(8):
+        dang = sum(rank[v] for v in vids if not out[v])
+        nxt = {v: 0.0 for v in vids}
+        for u in vids:
+            for w in out[u]:
+                nxt[w] += rank[u] / len(out[u])
+        rank = {v: (1 - d) * tele[v] + d * (nxt[v] + dang * tele[v]) for v in vids}
+    assert set(got) == set(vids)
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    for v in vids:
+        assert abs(got[v] - rank[v]) < 1e-9, (v, got[v], rank[v])
+
+
+@pytest.mark.parametrize("seed", TIERED_SEEDS[:2])
 def test_harmonic_centrality_exact_matches_python(spark, seed):
     from grasper_spark.algos import harmonic_centrality
 
@@ -207,7 +246,7 @@ def test_harmonic_centrality_exact_matches_python(spark, seed):
     g = _mk(spark, vids, edges, weights)
     got = {r.vid: r.harmonic
            for r in harmonic_centrality(g, n_seeds=len(vids), max_hops=20).collect()}
-    adj = _undirected_adj(vids, edges)
+    adj = _oriented_adj(vids, edges, "both")
     want = {}
     for v in vids:
         dist, q = {v: 0}, deque([v])

@@ -72,6 +72,23 @@ def test_personalized_pagerank_smoke(modern):
         personalized_pagerank(modern, seeds=[])
 
 
+def test_personalized_pagerank_dedupes_and_rejects_absent_seeds(modern):
+    """A repeated seed counts once (the teleport mass is split over the
+    distinct seed set), and a seed that is not a vertex raises instead
+    of leaking its teleport share."""
+    import pytest as _pt
+
+    from grasper_spark.algos import personalized_pagerank
+
+    one = sorted(personalized_pagerank(modern, seeds=[1], iterations=10).collect())
+    assert abs(sum(r.rank for r in one) - 1.0) < 1e-9
+    assert sorted(
+        personalized_pagerank(modern, seeds=[1, 1], iterations=10).collect()
+    ) == one
+    with _pt.raises(ValueError, match="99"):
+        personalized_pagerank(modern, seeds=[1, 99], iterations=10)
+
+
 @pytest.mark.slow  # 2x15 supersteps of scheduling overhead; fast PPR smoke keeps the contract
 def test_personalized_pagerank_concentrates_on_seed_neighborhood(modern):
     from grasper_spark.algos import personalized_pagerank
@@ -127,7 +144,7 @@ def test_triangle_count_skewed_hub_bounded_wedges(spark):
     from pyspark.sql import functions as F
 
     from grasper_spark import PropertyGraph
-    from grasper_spark.algos import _undirected, triangle_count
+    from grasper_spark.algos import _adjacency, triangle_count
 
     n = 200
     hub = n // 2  # ids on both sides of the hub
@@ -144,7 +161,7 @@ def test_triangle_count_skewed_hub_bounded_wedges(spark):
 
     # wedge-mass probe: rebuild the oriented relation the same way and
     # count join rows — must stay O(n), not (n/2)²
-    und = _undirected(g.edges).distinct()
+    und = _adjacency(g.edges).distinct()
     deg = und.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("deg"))
     withd = (
         und.join(deg.withColumnRenamed("vid", "src"), "src")

@@ -90,6 +90,19 @@ def test_roundtrip_through_text_sink(gsource, tmp_path, modern):
     assert sorted((r.src, r.dst, r.label) for r in e.collect()) == sorted(
         (r.src, r.dst, r.label) for r in modern.edges.collect()
     )
+    # the sink's vertices/ lines are the adjacency table's input
+    edges = modern.edges.collect()
+    adj = {
+        r.vid: (sorted(r.in_nbs), sorted(r.out_nbs))
+        for r in _load(gsource, "adjacency", out).collect()
+    }
+    assert adj == {
+        r.vid: (
+            sorted(x.src for x in edges if x.dst == r.vid),
+            sorted(x.dst for x in edges if x.src == r.vid),
+        )
+        for r in modern.vertices.collect()
+    }
 
 
 def test_stream_reader_picks_up_appended_files(gsource, tmp_path):

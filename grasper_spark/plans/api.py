@@ -25,6 +25,7 @@ from grasper_spark.graph import PropertyGraph
 from grasper_spark.plans.compiler import GremlinCompiler, Step, Stream, number_coins
 from grasper_spark.plans.parser import parse_query
 from grasper_spark.plans.predicates import P, Pred  # noqa: F401 (re-export)
+from grasper_spark.plans.steps import STEPS, param_slot, step_names
 
 
 class Order(enum.Enum):
@@ -186,17 +187,12 @@ class Traversal:
     def by(self, arg: Any = None, direction: Optional[Order] = None) -> "Traversal":
         """TinkerPop-style modulator: binds to the preceding
         project/group/groupCount/order step."""
-        from grasper_spark.plans.parser import BY_HOSTS, fold_by
-
-        if not self._steps or self._steps[-1].name not in BY_HOSTS:
-            raise ValueError("by() must follow project/group/groupCount/order")
         args: list[Any] = []
         if arg is not None:
             args.append(_steps_of(arg) if isinstance(arg, Traversal) else arg)
         if direction is not None:
             args.append(("ORDER", direction.value))
-        folded = fold_by(self._steps[-1], tuple(args))
-        return Traversal(self._graph, self._steps[:-1] + (folded,), self._seed, self._ctx)
+        return self._fold("by", *args)
 
     def path(self) -> "Traversal":
         return self._add("path")
@@ -263,28 +259,27 @@ class Traversal:
     def repeat(self, branch: "Traversal", times: int = 1) -> "Traversal":
         return self._add("repeat", _steps_of(branch), times)
 
-    def _fold_repeat(self, name: str, *args: Any) -> "Traversal":
-        from grasper_spark.plans.parser import fold_repeat_mod
+    def _fold(self, name: str, *args: Any) -> "Traversal":
+        """Fold modulator ``name(*args)`` into the last step."""
+        from grasper_spark.plans.parser import fold_modulator
 
-        if not self._steps or self._steps[-1].name != "repeat":
-            raise ValueError(f"{name}() must follow repeat()")
-        folded = fold_repeat_mod(self._steps[-1], name, args)
+        folded = fold_modulator(self._steps[-1] if self._steps else None, name, args)
         return Traversal(
             self._graph, self._steps[:-1] + (folded,), self._seed, self._ctx
         )
 
     def times(self, k: int) -> "Traversal":
-        return self._fold_repeat("times", k)
+        return self._fold("times", k)
 
     def until(self, cond: "Traversal") -> "Traversal":
         """repeat(...).until(cond): loop the repeat branch, emitting each
         traverser at the first position where the existential sub-
         traversal `cond` matches (TinkerPop do-while semantics)."""
-        return self._fold_repeat("until", _steps_of(cond))
+        return self._fold("until", _steps_of(cond))
 
     def emit(self) -> "Traversal":
         """repeat(...).emit(): output every intermediate position."""
-        return self._fold_repeat("emit")
+        return self._fold("emit")
 
     def and_(self, *branches: "Traversal") -> "Traversal":
         return self._add("and", *[_steps_of(b) for b in branches])
@@ -446,32 +441,6 @@ class G:
     AUTO_PREPARE_MAX = 16          # live auto-prepared templates
     AUTO_PREPARE_MAX_ROWS = 500_000
 
-    #: steps whose per-parameter grouped execution is INDISTINGUISHABLE
-    #: from per-query execution (pure per-traverser semantics).
-    #: Positional slices (limit/range/…) are excluded — their
-    #: arbitrary-pick tie-breaks may differ under grouping. coin(p) is
-    #: a content-hashed per-traverser draw, identical under grouping.
-    _AUTO_STEPS = frozenset(
-        ["V", "E", "has", "hasNot", "hasKey", "hasValue", "hasLabel", "is",
-         "coin",
-         "out", "in", "both", "outE", "inE", "bothE", "outV", "inV",
-         "bothV", "hasId", "values", "properties", "key", "label", "id", "valueMap",
-         "elementMap", "select", "as", "where", "dedup", "union", "and",
-         "or", "not", "match", "optional", "coalesce", "choose",
-         "constant", "project"]
-    )
-
-    #: barriers allowed as TOP-LEVEL steps only: the prepared layer
-    #: serves their empty-group case exactly (PreparedQuery._empty_rows,
-    #: the reference's barrier-on-empty-stream semantics,
-    #: expert/barrier_expert.hpp:442-490). Nested inside a branch they
-    #: pool over the branch's group columns, where a seen parameter
-    #: with an empty BRANCH would lose its 0-row aggregate — rejected.
-    _AUTO_BARRIERS = frozenset(
-        ["count", "sum", "max", "min", "mean", "fold", "group",
-         "groupCount", "dedupCount"]
-    )
-
     def __init__(
         self,
         graph: PropertyGraph,
@@ -611,72 +580,49 @@ class G:
         ):
             steps[0:1] = [Step("V"), Step("hasId", (P.eq(steps[0].args[0]),))]
 
-        def _eq_lit(pred):
-            return (
-                isinstance(pred, Pred) and pred.op == "eq"
-                and len(pred.args) == 1
-                and isinstance(pred.args[0], (str, int, float))
-                and not isinstance(pred.args[0], bool)
-            )
-
+        # (index, key, literal) of each step that can carry the parameter
         hits = [
-            (i, st)
-            for i, st in enumerate(steps)
-            if (st.name == "has" and len(st.args) == 2 and _eq_lit(st.args[1]))
-            or (st.name == "hasId" and len(st.args) == 1 and _eq_lit(st.args[0]))
+            (i, *slot)
+            for i, slot in enumerate(map(param_slot, steps))
+            if slot and isinstance(slot[1], (str, int, float)) and not isinstance(slot[1], bool)
         ]
         if len(hits) not in (1, 2):
             return None
         if hits[0][0] == 0 or steps[0].name not in ("V", "E") or steps[0].args:
             return None
-        hit_idx = {i for i, _ in hits}
-        # name checks: TOP-LEVEL steps may include barriers (served with
-        # exact empty-group synthesis); NESTED names (branch
+        # catalog checks: TOP-LEVEL steps may include barriers (served
+        # with exact empty-group synthesis); NESTED steps (branch
         # sub-traversals riding along inside step args) may not — a
         # barrier pooled inside a branch changes semantics under the
-        # parameter grouping (see _AUTO_BARRIERS)
-        from grasper_spark.plans.prepared import _walk_names
-
-        top = {s2.name for j, s2 in enumerate(steps) if j not in hit_idx}
-        nested = {
-            n
-            for j, s2 in enumerate(steps)
-            if j not in hit_idx
-            for a in s2.args
-            for n in _walk_names(a)
-        }
-        if not top <= (self._AUTO_STEPS | self._AUTO_BARRIERS):
-            return None
-        if not nested <= self._AUTO_STEPS:
-            return None
+        # parameter grouping (StepInfo.barrier)
+        hit_idx = {h[0] for h in hits}
+        for j, s2 in enumerate(steps):
+            if j in hit_idx:
+                continue
+            if not (STEPS[s2.name].auto or STEPS[s2.name].barrier):
+                return None
+            if not all(STEPS[n].auto for n in step_names(s2.args)):
+                return None
         # the literal's CLASS is part of the shape: a string literal on a
         # numeric-keyed template is a DIFFERENT query (the predicate
         # kernel type-gates it to empty) and must not be served from the
         # numeric materialization
         parts = []
         prev = 0
-        values = []
-        for i, st in hits:
-            if st.name == "hasId":
-                value = st.args[0].args[0]
+        for i, key, value in hits:
+            if steps[i].name == "hasId":
                 slot = "hasId(eq(?))"
             else:
-                value = st.args[1].args[0]
                 lit_cls = "num" if isinstance(value, (int, float)) else "str"
-                slot = f"has({st.args[0]!r},eq(?:{lit_cls}))"
-            values.append(value)
+                slot = f"has({key!r},eq(?:{lit_cls}))"
             parts.append(repr(list(steps[prev:i])))
             parts.append(f"|{slot}|")
             prev = i + 1
         parts.append(repr(list(steps[prev:])))
         shape = "".join(parts)
-        idxs = [i for i, _ in hits]
-        return (
-            shape,
-            steps,
-            idxs[0] if len(idxs) == 1 else idxs,
-            values[0] if len(values) == 1 else tuple(values),
-        )
+        if len(hits) == 1:
+            return shape, steps, hits[0][0], hits[0][2]
+        return shape, steps, [h[0] for h in hits], tuple(h[2] for h in hits)
 
     #: placeholder marking a shape whose materialization is in flight —
     #: concurrent query() threads seeing it fall through to per-query

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from grasper_spark.graph import PropertyGraph
 from grasper_spark.plans.predicates import P, Pred, pred_to_condition
+from grasper_spark.plans.steps import STEPS, Step, nodes, step_names
 
 # canonical stream columns
 VCOL = "_v"
@@ -127,15 +128,6 @@ class CompileError(ValueError):
     """Ill-typed or invalid step chain (plan-time, before execution)."""
 
 
-@dataclass(frozen=True)
-class Step:
-    name: str
-    args: tuple[Any, ...] = ()
-
-    def __repr__(self) -> str:  # pragma: no cover
-        return f"{self.name}({', '.join(map(repr, self.args))})"
-
-
 def number_coins(steps: Sequence[Step]) -> list[Step]:
     """Give every coin(p) in a traversal tree its pre-order ordinal as
     a second argument, coin(p, k). The ordinal salts that step's draw
@@ -156,16 +148,6 @@ def number_coins(steps: Sequence[Step]) -> list[Step]:
         return a
 
     return [walk(st) for st in steps]
-
-
-def _has_coin(tree: Any) -> bool:
-    """Whether a step tree (a Step, or nested tuples/lists of them)
-    holds a coin() step anywhere."""
-    if isinstance(tree, Step):
-        return tree.name == "coin" or _has_coin(tree.args)
-    if isinstance(tree, (tuple, list)):
-        return any(_has_coin(x) for x in tree)
-    return False
 
 
 def _traverser_identity(names: Sequence[str]) -> list[Column]:
@@ -282,12 +264,6 @@ class GremlinCompiler:
 
     # ---------- entry ----------
 
-    # steps that move the traverser to a new location (grow the path)
-    _PATH_STEPS = frozenset(
-        ["V", "E", "out", "in", "both", "outE", "inE", "bothE", "outV", "inV",
-         "bothV", "values", "label", "key", "properties", "select"]
-    )
-
     def compile(self, steps: Sequence[Step], start: Optional[Stream] = None) -> Stream:
         if start is None and any(
             st.name in ("path", "simplePath", "cyclicPath") for st in steps
@@ -321,7 +297,7 @@ class GremlinCompiler:
             if (
                 getattr(self, "_path_mode", False)
                 and start is None
-                and step.name in self._PATH_STEPS
+                and STEPS[step.name].path
             ):
                 s = self._record_path(s)
         return s
@@ -347,20 +323,6 @@ class GremlinCompiler:
                 out.append(steps[i])
                 i += 1
         return out
-
-    @staticmethod
-    def _mentions_label(obj: Any, label: str) -> bool:
-        """Conservative syntactic scan for a history-label reference in
-        step args (recursing through Steps, Preds and containers). Any
-        string equal to the label counts — false positives only cost a
-        skipped fusion, never a wrong plan."""
-        if isinstance(obj, str):
-            return obj == label
-        if isinstance(obj, (Step, Pred)):
-            return GremlinCompiler._mentions_label(obj.args, label)
-        if isinstance(obj, (tuple, list)):
-            return any(GremlinCompiler._mentions_label(o, label) for o in obj)
-        return False
 
     @staticmethod
     def _fuse_co_neq_dedup_count(steps: list[Step]) -> list[Step]:
@@ -393,8 +355,11 @@ class GremlinCompiler:
                 and s3.args == (Pred("neq", (s0.args[0],)),)
                 and s4.name == "dedupCount"
                 and not s4.args
-                and not GremlinCompiler._mentions_label(
-                    [st.args for st in steps[i + 5:]], s0.args[0]
+                # a conservative syntactic scan: any string equal to the
+                # label counts (a false positive only skips the fusion)
+                and not any(
+                    isinstance(n, str) and n == s0.args[0]
+                    for n in nodes(steps[i + 5:])
                 )
             ):
                 return (
@@ -1902,30 +1867,15 @@ class GremlinCompiler:
         s2.group_cols = s2.group_cols + [tcol]
         return s2, tcol
 
-    #: steps safe to share in a factored labelled-branch prefix: pure
-    #: row-local traversals/filters — no side effects (aggregate/store),
-    #: no draws (each branch's coin is its own draw; sample), no
-    #: barriers (order/range/limit) whose factoring could observe a
-    #: different stream
-    _FACTORABLE_STEPS = frozenset({
-        "out", "in", "both", "outE", "inE", "bothE", "outV", "inV",
-        "bothV", "has", "hasNot", "hasKey", "hasValue", "hasLabel",
-        "hasId", "is", "values", "key", "label", "where", "dedup",
-        "simplePath",
-    })
-    #: suffix steps expressible as one boolean Column over the shared
-    #: prefix (no stream-shape change): the single-pass flag path
-    _ROW_FILTER_STEPS = frozenset({
-        "has", "hasNot", "hasKey", "hasLabel", "hasId", "is",
-    })
-
     def _labelled_filter(self, s: Stream, branches: Sequence[Sequence[Step]], mode: str) -> Stream:
         # per-traverser existential test: pass iff all/any/none branches
         # produced ≥1 result for this input traverser
         # (/root/reference/expert/labelled_branch_expert.hpp:184-289).
         # Identical traversers share a tid unless a branch draws: then
         # each copy must flip on its own, so the tids are made unique
-        tagged, tcol = self._tagged(s, unique=_has_coin(branches))
+        tagged, tcol = self._tagged(
+            s, unique=any(STEPS[n].draws for n in step_names(branches))
+        )
         branches = [list(b) for b in branches]
         start = tagged
         if len(branches) > 1:
@@ -1939,7 +1889,7 @@ class GremlinCompiler:
             npfx = 0
             while npfx < limit:
                 st0 = branches[0][npfx]
-                if st0.name not in self._FACTORABLE_STEPS:
+                if not STEPS[st0.name].factor:
                     break
                 if any(b[npfx] != st0 for b in branches[1:]):
                     break
@@ -2002,7 +1952,7 @@ class GremlinCompiler:
         distinct) -> semi join. Returns None when any suffix needs the
         generic per-branch compile."""
         if any(
-            st.name not in self._ROW_FILTER_STEPS for b in suffixes for st in b
+            not STEPS[st.name].row_filter for b in suffixes for st in b
         ):
             return None
         if pre.kind == "V" and not pre.props:

@@ -1,10 +1,11 @@
 """Gremlin-subset string parser.
 
 A from-scratch tokenizer/parser with the reference parser's surface
-(/root/reference/core/parser.cpp): step whitelist at parser.cpp:1496-1539
-(42 steps), predicate names at parser.cpp:1541-1553, paren-matching step
-splitter GetSteps at parser.cpp:442-493, literal typing rules at
-utils/tool.hpp:159-177 (int if no '.', double with '.', quoted strings).
+(core/parser.cpp): the step names it accepts are the catalog rows
+flagged ``parse`` (plans/steps.py), predicate names at
+parser.cpp:1541-1553, paren-matching step splitter GetSteps at
+parser.cpp:442-493, literal typing rules at utils/tool.hpp:159-177 (int
+if no '.', double with '.', quoted strings).
 
 Produces the same Step AST the fluent API builds; compilation is shared.
 """
@@ -13,8 +14,8 @@ from __future__ import annotations
 
 from typing import Any
 
-from grasper_spark.plans.compiler import Step
 from grasper_spark.plans.predicates import P, Pred
+from grasper_spark.plans.steps import MODULATOR, STEPS, Step
 
 PRED_NAMES = {
     "eq", "neq", "lt", "lte", "gt", "gte",
@@ -22,25 +23,10 @@ PRED_NAMES = {
     "containing", "notContaining", "startingWith", "endingWith",
 }
 
-STEP_NAMES = {
-    "V", "E", "has", "hasId", "hasNot", "hasKey", "hasValue", "hasLabel", "is",
-    "where", "coin", "sample", "out", "in", "both", "outE", "inE", "bothE", "outV",
-    "inV", "bothV", "values", "label", "key", "properties", "as", "select",
-    "aggregate", "cap", "count", "sum", "max", "min", "mean", "group",
-    "groupCount", "dedup", "order", "range", "limit", "skip", "union", "path",
-    "repeat", "and", "or", "not", "optional", "choose", "project", "by",
-    "match", "coalesce", "tail", "id", "valueMap", "elementMap",
-    "simplePath", "cyclicPath", "until", "emit", "times", "fold",
-    "constant", "inject",
-}
-
 # steps whose string args are python-reserved in the fluent API
 _ALIASES = {
     "is_": "is", "in_": "in", "as_": "as", "and_": "and", "or_": "or",
     "not_": "not",
-    # TinkerPop store(x) = lazy-collected aggregate(x); in a batch
-    # DataFrame compilation both snapshot the stream at that point
-    "store": "aggregate",
 }
 
 
@@ -104,7 +90,7 @@ def _parse_arg(tok: str) -> Any:
         inner = tok[tok.index("(") + 1 : tok.rindex(")")]
         args = [] if not inner.strip() else [_parse_literal(a) for a in _split_top(inner, ",")]
         return Pred(head, tuple(args))
-    if "(" in tok and head in STEP_NAMES:
+    if "(" in tok and head in STEPS and STEPS[head].parse:
         return tuple(parse_steps(tok))
     if tok in ("incr", "asc"):
         return ("ORDER", True)
@@ -118,7 +104,9 @@ def _parse_step(tok: str) -> Step:
         raise ParseError(f"malformed step: {tok!r}")
     name = tok.split("(", 1)[0].strip()
     name = _ALIASES.get(name, name)
-    if name not in STEP_NAMES:
+    if name in STEPS and STEPS[name].alias:
+        name = STEPS[name].alias
+    if name not in STEPS or not STEPS[name].parse:
         raise ParseError(f"unknown step: {name!r}")
     inner = tok[tok.index("(") + 1 : tok.rindex(")")].strip()
     raw_args = [] if not inner else [_parse_arg(a) for a in _split_top(inner, ",")]
@@ -176,14 +164,21 @@ def _parse_step(tok: str) -> Step:
     return Step(name, tuple(raw_args))
 
 
-#: steps that accept trailing by() modulators
-BY_HOSTS = ("project", "group", "groupCount", "order", "path")
+def fold_modulator(prev: Step | None, name: str, args: tuple) -> Step:
+    """Fold modulator ``name(*args)`` into ``prev``, the step before it:
+    by() into one of its catalog hosts (project/group/groupCount/order/
+    path), times/until/emit into repeat. Shared by the string parser
+    and the fluent API."""
+    hosts = STEPS[name].hosts
+    if prev is None or prev.name not in hosts:
+        raise ParseError(f"{name}() must follow {'/'.join(hosts)}")
+    if name == "by":
+        return _fold_by(prev, args)
+    return _fold_repeat_mod(prev, name, args)
 
 
-def fold_by(prev: Step, args: tuple) -> Step:
-    """Fold a by() modulator into its host step (TinkerPop-style: by()
-    binds to the preceding project/group/groupCount/order). Shared by
-    the string parser and the fluent API."""
+def _fold_by(prev: Step, args: tuple) -> Step:
+    """Fold a by() modulator into its host step (TinkerPop-style)."""
     if prev.name == "project":
         keys, branches = prev.args
         if len(branches) >= len(keys):
@@ -232,15 +227,11 @@ def fold_by(prev: Step, args: tuple) -> Step:
         if len(args) != 1 or not isinstance(args[0], str):
             raise ParseError("path().by() takes one property key")
         return Step("path", (args[0],))
-    raise ParseError(f"by() cannot follow {prev.name}()")
 
 
-def fold_repeat_mod(prev: Step, name: str, args: tuple) -> Step:
+def _fold_repeat_mod(prev: Step, name: str, args: tuple) -> Step:
     """Fold a times/until/emit modulator into its preceding repeat step
-    (normalized args: (branch, times, until, emit)). Shared by the
-    string parser and the fluent API."""
-    if prev.name != "repeat":
-        raise ParseError(f"{name}() must follow repeat()")
+    (normalized args: (branch, times, until, emit))."""
     a = prev.args
     branch = a[0]
     times = a[1] if len(a) > 1 else 1
@@ -269,14 +260,9 @@ def parse_steps(chain: str) -> list[Step]:
         if not t:
             continue
         st = _parse_step(t)
-        if st.name == "by":
-            if not steps or steps[-1].name not in BY_HOSTS:
-                raise ParseError("by() must follow project/group/groupCount/order")
-            steps[-1] = fold_by(steps[-1], st.args)
-        elif st.name in ("times", "until", "emit"):
-            if not steps:
-                raise ParseError(f"{st.name}() must follow repeat()")
-            steps[-1] = fold_repeat_mod(steps[-1], st.name, st.args)
+        if STEPS[st.name].kind == MODULATOR:
+            prev = steps.pop() if steps else None
+            steps.append(fold_modulator(prev, st.name, st.args))
         else:
             steps.append(st)
     return steps

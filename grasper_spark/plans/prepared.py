@@ -63,7 +63,7 @@ from grasper_spark.plans.compiler import (
     number_coins,
 )
 from grasper_spark.plans.parser import parse_query
-from grasper_spark.plans.predicates import Pred
+from grasper_spark.plans.steps import STEPS, bind_param, nodes, param_slot, step_names
 
 #: passenger column carrying the parameter value. TID-prefixed so the
 #: compiler's barrier machinery preserves it through aggregations
@@ -73,65 +73,23 @@ PQCOL = f"{TID}pq"
 #: sentinel literal substituted for the template marker before parsing
 _SENTINEL = "__GRASPER_PARAM_7f3a__"
 
-#: steps whose semantics are NOT per-traverser (global side-effect
-#: stores, sample(n)'s global top-n, path recording) — grouping by the
-#: parameter would silently change their meaning, so such templates
-#: fall back. coin(p) is absent: its draw hashes the row's value and
-#: the history without the passenger, so each parameter's rows flip
-#: exactly as they do per query (compiler ``_step_coin``).
-_UNSUPPORTED = frozenset(
-    ["aggregate", "store", "cap", "sample", "path", "simplePath",
-     "cyclicPath", "inject"]
-)
-
-
-#: barrier steps whose EMPTY-group behavior differs between grouped and
-#: per-query execution (df.agg() on empty input yields one row — the
-#: reference's COUNT barrier likewise emits 0 on an empty stream,
-#: /root/reference/expert/barrier_expert.hpp:442-490 — while a grouped
-#: agg drops the group). Templates containing one are served with EXACT
-#: semantics: the per-query empty-input result is computed once at
-#: prepare time (``_empty_result_rows``) and synthesized for parameter
-#: values outside the observed domain. The one remaining exclusion is a
-#: barrier nested inside a union() branch: union branches share the
-#: incoming stream's group columns rather than a per-traverser tag
-#: (compiler `_step_union` → `_grouped_agg`), so a seen parameter whose
-#: BRANCH yields no rows would drop the branch's 0-row aggregate — such
-#: templates are rejected.
-_BARRIERS = frozenset(
-    ["count", "sum", "max", "min", "mean", "fold", "group", "groupCount",
-     "dedupCount"]
-)
-
-
-def _walk_names(obj):
-    """Yield every step name in a step tree (branch args included)."""
-    if isinstance(obj, Step):
-        yield obj.name
-        for a in obj.args:
-            yield from _walk_names(a)
-    elif isinstance(obj, (list, tuple)):
-        for x in obj:
-            yield from _walk_names(x)
-
-
 def _validate_steps(steps) -> None:
-    bad = sorted(_UNSUPPORTED.intersection(_walk_names(steps)))
+    names = set(step_names(steps))
+    bad = sorted(n for n in names if not STEPS[n].prepare)
     if bad:
         raise FallbackEligible(f"template step(s) not preparable: {bad}")
-    for st in steps:
-        if st.name == "union":
-            nested = sorted(
-                _BARRIERS.intersection(
-                    n for a in st.args for n in _walk_names(a)
-                )
-            )
-            if nested:
-                raise FallbackEligible(
-                    f"barrier step(s) {nested} inside a union() branch are "
-                    f"not preparable (empty parameter groups would drop "
-                    f"the branch's 0-row aggregate)"
-                )
+    # a barrier inside a union() branch, at any depth (StepInfo.barrier)
+    nested = sorted({
+        n
+        for u in nodes(steps) if isinstance(u, Step) and u.name == "union"
+        for n in step_names(u.args) if STEPS[n].barrier
+    })
+    if nested:
+        raise FallbackEligible(
+            f"barrier step(s) {nested} inside a union() branch are "
+            f"not preparable (empty parameter groups would drop "
+            f"the branch's 0-row aggregate)"
+        )
 
 
 class PrepareError(ValueError):
@@ -183,9 +141,10 @@ def _engine_version() -> str:
         import grasper_spark.plans.compiler as _c
         import grasper_spark.plans.parser as _p
         import grasper_spark.plans.predicates as _pr
+        import grasper_spark.plans.steps as _s
 
         h = hashlib.md5()
-        for mod in (_c, _pr, _p, _a, __import__(__name__, fromlist=["x"])):
+        for mod in (_c, _pr, _p, _a, _s, __import__(__name__, fromlist=["x"])):
             try:
                 with open(mod.__file__, "rb") as fh:
                     h.update(fh.read())
@@ -277,10 +236,7 @@ class PreparedQuery:
         # coin sites as the per-query compile (Traversal) numbers them
         steps = number_coins(steps)
         _validate_steps(steps)
-        self.keys = [
-            "__id__" if steps[i].name == "hasId" else steps[i].args[0]
-            for i in idxs
-        ]
+        self.keys = [param_slot(steps[i])[0] for i in idxs]
         self.key = self.keys[0]
         self._pqcols = [PQCOL if j == 0 else f"{PQCOL}{j + 1}" for j in range(len(idxs))]
 
@@ -338,7 +294,7 @@ class PreparedQuery:
         self._empty_rows: list[tuple] = []
         if side is not None:
             self._empty_rows = [tuple(r) for r in side["empty_rows"]]
-        elif _BARRIERS.intersection(_walk_names(steps)):
+        elif any(STEPS[n].barrier for n in step_names(steps)):
             self._empty_rows = self._empty_result_rows(g, steps, idxs)
         self.param_dtype = self.param_dtypes[0]
         # the served (per-value) schema: df() answers carry exactly the
@@ -669,38 +625,19 @@ class PreparedQuery:
 
     @staticmethod
     def _find_one_param(steps: list[Step], sent: str) -> int:
-        def _is_param(st: Step) -> bool:
-            if (st.name == "has" and len(st.args) == 2
-                    and isinstance(st.args[1], Pred)
-                    and st.args[1].op == "eq" and st.args[1].args == (sent,)):
-                return True
-            return (
-                st.name == "hasId" and len(st.args) == 1
-                and isinstance(st.args[0], Pred)
-                and st.args[0].op == "eq" and st.args[0].args == (sent,)
-            )
-
-        hits = [(i, st) for i, st in enumerate(steps) if _is_param(st)]
+        slots = [param_slot(st) for st in steps]
+        hits = [i for i, slot in enumerate(slots) if slot and slot[1] == sent]
         # the sentinel anywhere else (another step, within(), a branch
-        # sub-traversal, …) is a shape this layer does not model —
-        # recurse through nested branch step tuples so a marker inside
+        # sub-traversal, …) is a shape this layer does not model — count
+        # it through nested branch step tuples so a marker inside
         # union()/and()/by() cannot silently compile as a literal
-        def _count(obj) -> int:
-            if isinstance(obj, Step):
-                return sum(_count(a) for a in obj.args)
-            if isinstance(obj, Pred):
-                return sum(str(a) == sent for a in obj.args)
-            if isinstance(obj, (list, tuple)):
-                return sum(_count(x) for x in obj)
-            return 1 if obj == sent else 0
-
-        loose = sum(_count(st) for st in steps)
+        loose = sum(isinstance(n, str) and n == sent for n in nodes(steps))
         if len(hits) != 1 or loose != 1:
             raise PrepareError(
                 f"template needs each marker exactly once as has(k, marker); "
                 f"found {len(hits)} (marker occurrences: {loose})"
             )
-        return hits[0][0]
+        return hits[0]
 
     def _project(self, c: GremlinCompiler, stream) -> DataFrame:
         """result_df + the passenger keys (kept first).
@@ -968,17 +905,13 @@ class PerQueryPrepared:
         self._g = g
         self._steps = PreparedQuery._parse(template, marker)
         self._idxs = PreparedQuery._find_param_steps(self._steps, marker)
-        self.keys = [
-            "__id__" if self._steps[i].name == "hasId" else self._steps[i].args[0]
-            for i in self._idxs
-        ]
+        slots = [param_slot(self._steps[i]) for i in self._idxs]
+        self.keys = [key for key, _ in slots]
         self.key = self.keys[0]
         # fail-fast compile (no job): analysis errors belong to
         # prepare(), and the output schema is the same for every value
-        sents = [
-            self._steps[i].args[-1].args[0] for i in self._idxs
-        ]
-        probe = self._df_for(sents[0] if len(sents) == 1 else tuple(sents))
+        sents = tuple(sent for _, sent in slots)
+        probe = self._df_for(sents[0] if len(sents) == 1 else sents)
         self.columns = probe.columns
         from collections import OrderedDict
 
@@ -1044,11 +977,7 @@ class PerQueryPrepared:
             )
         steps = list(self._steps)
         for i, v in zip(self._idxs, vals):
-            st = steps[i]
-            if st.name == "hasId":
-                steps[i] = replace(st, args=(Pred("eq", (v,)),))
-            else:
-                steps[i] = replace(st, args=(st.args[0], Pred("eq", (v,))))
+            steps[i] = bind_param(steps[i], v)
         # (a stream-side broadcast hint for this posture was measured
         # and REJECTED: the default table-side broadcast executes ~35%
         # faster because the stream subtree must run before a stream

@@ -124,6 +124,28 @@ def test_union_nested_barrier_raise_opt_in(gq):
     assert issubclass(FallbackEligible, PrepareError)
 
 
+#: the union() sits under choose(), not at the top level
+DEEP_UNION_T = (
+    'g.V().has("name","$RAND").choose(out("knows"), '
+    'union(out("knows").count()), union(in("knows").count()))'
+)
+
+
+def test_union_nested_barrier_under_another_branch_falls_back(gq):
+    """A barrier inside a union() at any depth is outside the grouped
+    model: grouped execution would answer marko with [(2,)], dropping
+    the empty branch's (0,) that per-query execution returns."""
+    from grasper_spark.plans.prepared import PerQueryPrepared, PrepareError
+
+    p = prepare(gq, DEEP_UNION_T)
+    assert isinstance(p, PerQueryPrepared)
+    for v in ("marko", "vadas", "josh"):
+        assert p.rows(v) == _per_query(gq, DEEP_UNION_T, v), v
+    p.close()
+    with pytest.raises(PrepareError, match="union"):
+        prepare(gq, DEEP_UNION_T, fallback=False)
+
+
 def test_side_effect_template_serves_per_query_fallback(gq):
     """Global side-effect steps (aggregate/where(without)) execute fine
     per-query — explicit prepare() serves them in fallback mode too."""

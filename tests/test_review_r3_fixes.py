@@ -42,7 +42,7 @@ def test_nested_union_barrier_rejected(g):
             g, 'g.V().has("age",$RAND).union(out("knows").count())',
             fallback=False,
         )
-    # nested sample inside a branch is rejected too (deep _UNSUPPORTED)
+    # nested sample inside a branch is rejected too (StepInfo.prepare, any depth)
     with pytest.raises(PrepareError, match="not preparable"):
         prepare(g, 'g.V().has("age",$RAND).and(out().sample(2))', fallback=False)
     # the default returns the fallback tier with per-query answers

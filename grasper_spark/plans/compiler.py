@@ -2,15 +2,16 @@
 
 The engine's central representation decision (SURVEY.md §1.4): the
 reference streams traversers as ``vector<pair<history_t, vector<value_t>>>``
-(/root/reference/core/message.hpp:74-100). Here a traverser stream is ONE
+(core/message.hpp:74-100). Here a traverser stream is ONE
 DataFrame:
 
 - current value: ``_v`` (vertex vid) | ``_esrc,_edst,_el,_ep_*`` (edge
   row) | ``_val`` (scalar)
 - each ``as('a')``: an extra column ``_as_a``
-- labelled-branch membership (and/or/not): a ``_tid`` traverser-id column
-  (content hash), mirroring CreateBranchedMsgWithHisLabel
-  (/root/reference/core/message.cpp:214-268)
+- labelled-branch membership (and/or/not): the cheapest exact key
+  (``steps.branch_key``): one inline Column, the edge key column, the
+  current element, or a ``_tid`` traverser-id column (content hash)
+  mirroring CreateBranchedMsgWithHisLabel (core/message.cpp:214-268)
 
 Every Grasper expert then becomes a stock DataFrame op (filter / join /
 groupBy / union / window), so Catalyst does predicate pushdown, column
@@ -21,7 +22,7 @@ Scale notes:
 - vertex property access joins V lazily (only when a later step reads a
   property before the next traversal) — the analogue of Grasper's
   on-demand remote property fetch + cache
-  (/root/reference/expert/expert_cache.hpp) without the cache, because
+  (expert/expert_cache.hpp) without the cache, because
   properties ride columnar and pruned.
 - traversals are plain equi-joins on src/dst: Catalyst/AQE picks
   broadcast vs sort-merge and handles skew; at cluster scale, bucket E
@@ -41,7 +42,9 @@ from pyspark.sql import functions as F
 
 from grasper_spark.graph import PropertyGraph
 from grasper_spark.plans.predicates import P, Pred, pred_to_condition
-from grasper_spark.plans.steps import STEPS, Step, nodes, step_names
+from grasper_spark.plans.steps import (
+    ELEMENT, HOP, INLINE, STEPS, TAGGED, Step, branch_key, nodes, step_names,
+)
 
 # canonical stream columns
 VCOL = "_v"
@@ -54,6 +57,7 @@ EP = "_ep_"
 VAL = "_val"
 AS = "_as_"
 TID = "_tid"
+KEY = "_key"
 ORD = "_ord_"
 
 _uid = itertools.count()
@@ -118,7 +122,7 @@ def _persisted_store(df: DataFrame) -> DataFrame:
 
 def eid_col() -> Column:
     """The synthetic edge id: src<<32 | dst — the reference's eid_t
-    bit-pack (/root/reference/base/type.hpp:156-184). The ONE packing
+    bit-pack (base/type.hpp:156-184). The ONE packing
     shared by Stream.val(), id(), elementMap, and hasId (a second
     packing would make ids from id() unmatchable by hasId())."""
     return F.shiftleft(F.col(ESRC), 32).bitwiseOR(F.col(EDST))
@@ -197,7 +201,7 @@ class Stream:
 
 
 def _fmt_value(col: Column, dtype: str) -> Column:
-    """Tool::DebugString parity (/root/reference/utils/tool.hpp:334-368):
+    """Tool::DebugString parity (utils/tool.hpp:334-368):
     doubles render as %.6f, trailing '.'/'0' trimmed when |v| >= 1."""
     if dtype in ("double", "float"):
         s = F.format_string("%.6f", col)
@@ -278,7 +282,7 @@ class GremlinCompiler:
         # (SetConfig('step_reorder', b) — expert/config_expert.hpp:47,
         # applied at parse time in core/parser.cpp:496): disabling it
         # yields the literal step-by-step plan for A/B comparison
-        if str(self.config.get("step_reorder", "true")).lower() != "false":
+        if self._reorder():
             steps = self._fuse_dedup_count(list(steps))
             if start is None and not getattr(self, "_path_mode", False):
                 # top-level only: the fused step ignores branch group
@@ -333,12 +337,12 @@ class GremlinCompiler:
         co-occurrence PAIR — sum over neighbors of (stream-degree x
         total-degree), quadratic in degree — then deduplicates.
         dedup().count() makes pair multiplicity unobservable, so the
-        answer only needs, per intermediate neighbor, the DISTINCT
-        count of stream-side sources (and the single source when that
-        count is 1): b survives iff some a != b co-occurs, i.e. iff
-        n_distinct >= 2 or the one source differs from b. The fused
-        step computes exactly that with per-neighbor aggregates —
-        linear in the edge count. in(L).out(L) is the mirrored
+        answer only needs, per intermediate neighbor, the least and the
+        greatest stream-side source: b survives iff some a != b
+        co-occurs, i.e. iff b differs from the least or from the
+        greatest (two distinct sources cannot both equal b). The fused
+        step computes exactly that with per-neighbor min/max aggregates
+        — linear in the edge count. in(L).out(L) is the mirrored
         direction. Fires only when the as-label is referenced nowhere
         after the where()."""
         for i in range(len(steps) - 4):
@@ -372,11 +376,11 @@ class GremlinCompiler:
     def _try_index_scan(
         self, steps: list[Step]
     ) -> tuple[list[Step], Optional[Stream]]:
-        """Index-scan conversion (/root/reference/core/parser.cpp:991-1081):
+        """Index-scan conversion (core/parser.cpp:991-1081):
         a `has(key, pred)` / `hasLabel(...)` in the leading filter run
         after `V()`/`E()` becomes a posting-list lookup when its match
         count clears the selectivity gate (count < ratio·total,
-        /root/reference/core/index_store.hpp:17); among several eligible
+        core/index_store.hpp:17); among several eligible
         filters the most selective converts (min_count logic) and the
         rest stay as filters over the looked-up stream."""
         if (
@@ -604,7 +608,7 @@ class GremlinCompiler:
 
     def _step_hasValue(self, s: Stream, *vals: Any) -> Stream:
         # "any property has this value" — has_expert pid=-1 path
-        # (/root/reference/expert/has_expert.hpp:42-217)
+        # (expert/has_expert.hpp:42-217)
         s = self._ensure_vprops(s) if s.kind == "V" else s
         keys = self.g.vertex_keys if s.kind == "V" else self.g.edge_keys
         prefix = VP if s.kind == "V" else EP
@@ -689,7 +693,7 @@ class GremlinCompiler:
     # ---------- traversals ----------
 
     def _expand(self, s: Stream, elabels: tuple[str, ...], direction: str, to: str) -> Stream:
-        """The single traversal op (/root/reference/expert/traversal_expert.hpp).
+        """The single traversal op (expert/traversal_expert.hpp).
 
         direction 'out': join stream._v == E.src, move to dst;
         'in': join on dst, move to src. `to` is 'V' or 'E'.
@@ -776,7 +780,7 @@ class GremlinCompiler:
 
     def _step_outV(self, s: Stream) -> Stream:
         # edge endpoints decode straight from the edge key — no data access
-        # (/root/reference/expert/traversal_expert.hpp:205-238)
+        # (expert/traversal_expert.hpp:205-238)
         assert s.kind == "E"
         df = s.df.select(*s.hist_cols(), *s.sort_cols(), F.col(ESRC).alias(VCOL))
         return self._traversal_result(s, df, "V", keep_sort=True)
@@ -797,7 +801,7 @@ class GremlinCompiler:
 
     def _step_values(self, s: Stream, *keys: str) -> Stream:
         # missing keys DROP the element (not null) —
-        # /root/reference/expert/values_expert.hpp:102-105
+        # expert/values_expert.hpp:102-105
         assert keys, "values() needs at least one key"
         if len(keys) == 1:
             # string-expression fast path (one selectExpr round trip —
@@ -828,7 +832,7 @@ class GremlinCompiler:
 
     def _step_key(self, s: Stream) -> Stream:
         # element → names of present property keys
-        # (/root/reference/expert/key_expert.hpp:70-108)
+        # (expert/key_expert.hpp:70-108)
         s = self._ensure_vprops(s) if s.kind == "V" else s
         keys = self.g.vertex_keys if s.kind == "V" else self.g.edge_keys
         prefix = VP if s.kind == "V" else EP
@@ -842,8 +846,8 @@ class GremlinCompiler:
 
     def _step_properties(self, s: Stream, *keys: str) -> Stream:
         # element → "{key:value}" strings, missing keys skipped
-        # (/root/reference/expert/properties_expert.hpp:76-194,
-        #  format /root/reference/utils/tool.hpp:295-301)
+        # (expert/properties_expert.hpp:76-194,
+        #  format utils/tool.hpp:295-301)
         s = self._ensure_vprops(s) if s.kind == "V" else s
         all_keys = self.g.vertex_keys if s.kind == "V" else self.g.edge_keys
         use = list(keys) if keys else list(all_keys)
@@ -966,7 +970,7 @@ class GremlinCompiler:
 
     def _step_select(self, s: Stream, *labels: str) -> Stream:
         # 1 key → the recorded value; n keys → "[a:v1, b:v2]"
-        # (/root/reference/expert/select_expert.hpp:70-138)
+        # (expert/select_expert.hpp:70-138)
         for lb in labels:
             assert lb in s.history, f"select: unknown label '{lb}'"
         if len(labels) == 1:
@@ -1060,14 +1064,16 @@ class GremlinCompiler:
 
     def _where_side_effect(self, s: Stream, pred: Pred) -> Stream:
         # membership vs aggregate('x') store — semi/anti join
-        # (/root/reference/expert/where_expert.hpp:61-81,158-198).
+        # (expert/where_expert.hpp:61-81,158-198).
         # No broadcast hint: a forced hint is honored until it OOMs, and
         # an aggregate('x') over a large stream would kill executors at
         # scale. AQE broadcasts small stores from runtime stats anyway
         # and falls back to a shuffle join for large ones.
         df = s.df.withColumn("_wv", s.val())
         for name in pred.args:
-            se = self.side_effects[name].select(F.col("seval").alias("_wv")).distinct()
+            # no distinct: duplicates on the store side change no
+            # semi or anti join's result
+            se = self.side_effects[name].select(F.col("seval").alias("_wv"))
             how = "left_semi" if pred.op == "within" else "left_anti"
             df = df.join(se, "_wv", how)
         return replace(s, df=df.drop("_wv"))
@@ -1076,7 +1082,7 @@ class GremlinCompiler:
 
     def _step_aggregate(self, s: Stream, name: str) -> Stream:
         # snapshot the stream into store `name`; stream passes through
-        # (/root/reference/expert/barrier_expert.hpp:314-364).
+        # (expert/barrier_expert.hpp:314-364).
         # The snapshot is PERSISTED at the fork: the continuing
         # traversal and every later where(within/without) anti/semi
         # join then read ONE materialized relation instead of each
@@ -1118,7 +1124,7 @@ class GremlinCompiler:
         return replace(s, df=s.df.select(*keep), props=False)
 
     def _step_cap(self, s: Stream, *names: str) -> Stream:
-        # "x:[v1, v2]" per store (/root/reference/expert/barrier_expert.hpp:366-430);
+        # "x:[v1, v2]" per store (expert/barrier_expert.hpp:366-430);
         # values sorted for determinism (reference emits arrival order).
         outs = []
         for name in names:
@@ -1160,7 +1166,7 @@ class GremlinCompiler:
 
     def _step_count(self, s: Stream) -> Stream:
         # partial+final agg is Catalyst-native — the reference's
-        # sender-side partial counts (/root/reference/core/message.cpp:336-340)
+        # sender-side partial counts (core/message.cpp:336-340)
         out = self._grouped_agg(s, F.count(F.lit(1)))
         out.dtype = "bigint"
         return out
@@ -1174,7 +1180,7 @@ class GremlinCompiler:
         col = F.col(VAL)
         agg = {"sum": F.sum, "max": F.max, "min": F.min, "mean": F.avg}[fn](col)
         # reference MATH coerces to double
-        # (/root/reference/expert/barrier_expert.hpp:1061-1178)
+        # (expert/barrier_expert.hpp:1061-1178)
         out = self._grouped_agg(s, agg.cast("double"))
         out.dtype = "double"
         return out
@@ -1223,7 +1229,7 @@ class GremlinCompiler:
         return out, F.col(bc), dt
 
     def _step_groupCount(self, s: Stream, key: Optional[str] = None, relational: bool = False) -> Stream:
-        # group → "key:count" strings (/root/reference/expert/barrier_expert.hpp:605-730)
+        # group → "key:count" strings (expert/barrier_expert.hpp:605-730)
         s, kcol, kdt = self._group_key(s, key)
         df = s.df.filter(kcol.isNotNull()) if key is not None else s.df
         gcols = [kcol.alias("_gk"), *s.group_cols]
@@ -1245,7 +1251,7 @@ class GremlinCompiler:
         relational: bool = False,
     ) -> Stream:
         # group(k?, v?) → "key:[v1, v2]" strings; missing keys/values drop
-        # the element (/root/reference/expert/barrier_expert.hpp:663-667)
+        # the element (expert/barrier_expert.hpp:663-667)
         s, kcol, kdt = self._group_key(s, key)
         s, vcol, vdt = self._group_key(s, value)
         df = s.df
@@ -1271,7 +1277,7 @@ class GremlinCompiler:
 
     def _step_dedup(self, s: Stream, *labels: str) -> Stream:
         # distinct by current value, or by history-label tuple
-        # (/root/reference/expert/barrier_expert.hpp:502-593).
+        # (expert/barrier_expert.hpp:502-593).
         # The reference keeps an arbitrary arrival-order survivor; we keep
         # the content-hash-minimal row instead — same multiset semantics,
         # but DETERMINISTIC across runs, partitionings, and cluster sizes.
@@ -1333,10 +1339,7 @@ class GremlinCompiler:
             _rel(by_dst=(direction != "out"))
             .join(src, "_cnp", "left_semi")
             .groupBy("_cnm")
-            .agg(
-                F.countDistinct("_cnp").alias("_cnn"),
-                F.min("_cnp").alias("_cn1"),
-            )
+            .agg(F.min("_cnp").alias("_cn1"), F.max("_cnp").alias("_cn2"))
         )
         # candidate enumeration keys on the NEIGHBOR side (mid): the
         # mid-bucketed relation joins the (small) per-neighbor stats
@@ -1360,15 +1363,17 @@ class GremlinCompiler:
             # only cap parallelism, so the gate mirrors the merge
             # hint's.
             stats = stats.repartition(nb, "_cnm")
+        # b co-occurs with some a != b iff b is not both the least and
+        # the greatest source (no distinct-count aggregate needed)
         cand = cand_rel.join(stats, "_cnm").filter(
-            (F.col("_cnn") >= 2) | (F.col("_cnp") != F.col("_cn1"))
+            (F.col("_cnp") != F.col("_cn1")) | (F.col("_cnp") != F.col("_cn2"))
         )
         out = Stream(df=cand.select(F.col("_cnp").alias(VCOL)), kind="V")
         return self._step_dedupCount(out)
 
     def _step_order(self, s: Stream, *specs) -> Stream:
         # global sort; keyed order drops elements missing the key
-        # (/root/reference/expert/barrier_expert.hpp:745-858);
+        # (expert/barrier_expert.hpp:745-858);
         # order().by(sub-traversal) sorts by the per-traverser branch
         # value; chained by() modulators append secondary sort keys
         # (extension — the reference sorts on one key)
@@ -1399,7 +1404,7 @@ class GremlinCompiler:
 
     def _slice(self, s: Stream, start: int, end: int) -> Stream:
         """range(a,b) inclusive positional slice; b=-1 → to end
-        (/root/reference/expert/barrier_expert.hpp:870-958). Slices follow
+        (expert/barrier_expert.hpp:870-958). Slices follow
         the current sort if any, else a deterministic arbitrary order (the
         reference slices arrival order — nondeterministic too).
 
@@ -1602,7 +1607,7 @@ class GremlinCompiler:
 
     def _step_union(self, s: Stream, *branches: Sequence[Step]) -> Stream:
         # copy input into each sub-pipeline, merge outputs
-        # (/root/reference/expert/branch_expert.hpp:12-45).
+        # (expert/branch_expert.hpp:12-45).
         # With 2+ branches each sub-plan embeds the full upstream
         # subtree, so Spark would re-execute the input once PER BRANCH —
         # at sf1 that re-scan was the steepest graph-side scaling ratio
@@ -1731,7 +1736,7 @@ class GremlinCompiler:
         emit: bool = False,
     ) -> Stream:
         # reference repeat == single-pass union ("Act just as union",
-        # /root/reference/core/parser.cpp:1305-1318); times>1 unrolling
+        # core/parser.cpp:1305-1318); times>1 unrolling
         # and until()/emit() iteration are our parity-plus extensions
         # (TinkerPop semantics).
         outer = self._rounds
@@ -1869,16 +1874,23 @@ class GremlinCompiler:
 
     def _labelled_filter(self, s: Stream, branches: Sequence[Sequence[Step]], mode: str) -> Stream:
         # per-traverser existential test: pass iff all/any/none branches
-        # produced ≥1 result for this input traverser
-        # (/root/reference/expert/labelled_branch_expert.hpp:184-289).
-        # Identical traversers share a tid unless a branch draws: then
-        # each copy must flip on its own, so the tids are made unique
-        tagged, tcol = self._tagged(
-            s, unique=any(STEPS[n].draws for n in step_names(branches))
-        )
+        # produced >=1 result for this input traverser
+        # (expert/labelled_branch_expert.hpp:184-289). The branch set
+        # keys on the cheapest exact key (steps.branch_key); with
+        # step_reorder off every set takes the literal tid path
         branches = [list(b) for b in branches]
-        start = tagged
-        if len(branches) > 1:
+        key = branch_key(branches) if self._reorder() else TAGGED
+        if key == INLINE:
+            out = self._inline_filter(s, branches, mode)
+            if out is not None:
+                return out
+            key = ELEMENT  # not expressible as a Column: compile it
+        if key == HOP:
+            assert s.kind == "V", f"{branches[0][0].name} requires vertex stream"
+            sets = [self._hop_keys(b[0]) for b in branches]
+            return self._key_filter(s, s.df, VCOL, VCOL, sets, mode, distinct=False)
+        keyed, start, kcol, jcol = self._branch_start(s, key, branches)
+        if len(branches) > 1 and self._reorder():
             # factor the branches' longest common pure prefix: Spark's
             # DAG re-executes a shared subtree once PER REFERENCE, so
             # and(out(e).hasA, out(e).hasB) paid the expansion twice.
@@ -1895,118 +1907,206 @@ class GremlinCompiler:
                     break
                 npfx += 1
             if npfx:
-                pre = self.compile(branches[0][:npfx], start=tagged)
+                pre = self.compile(branches[0][:npfx], start=start)
                 suffixes = [b[npfx:] for b in branches]
-                fast = self._suffix_flags_filter(s, tagged, pre, suffixes, tcol, mode)
-                if fast is not None:
-                    return fast
+                passing = self._suffix_flags_filter(pre, suffixes, kcol, mode)
+                if passing is not None:
+                    return self._key_filter(s, keyed, kcol, jcol, [passing], "or")
                 pre = self._pruned_fork(pre)
-                pre = replace(pre, df=_persisted_store(pre.df))
-                start = pre
+                start = replace(pre, df=_persisted_store(pre.df))
                 branches = suffixes
-        tid_sets = [
-            (self.compile(list(b), start=start) if b else start).df.select(tcol)
+        sets = [
+            (self.compile(b, start=start) if b else start).df.select(kcol)
             for b in branches
         ]
-        # One shuffle for the whole branch set: union the branch outputs
-        # (cheap, no exchange) and reduce once, instead of a distinct per
-        # branch plus a join per intersection. Partial (map-side)
-        # aggregation absorbs high-fanout branches before the exchange.
-        unioned = tid_sets[0]
-        for i, t in enumerate(tid_sets[1:], start=1):
-            unioned = unioned.unionByName(t)
-        if mode == "and" and len(tid_sets) > 1:
-            # tid passes iff every branch produced >=1 result: tag rows
-            # with their branch ordinal and count distinct ordinals.
-            tagged_union = tid_sets[0].withColumn("_br", F.lit(0))
-            for i, t in enumerate(tid_sets[1:], start=1):
-                tagged_union = tagged_union.unionByName(t.withColumn("_br", F.lit(i)))
-            passing = (
-                tagged_union.groupBy(tcol)
-                .agg(F.countDistinct("_br").alias("_nb"))
-                .filter(F.col("_nb") == len(tid_sets))
-                .select(tcol)
+        return self._key_filter(s, keyed, kcol, jcol, sets, mode)
+
+    def _reorder(self) -> bool:
+        return str(self.config.get("step_reorder", "true")).lower() != "false"
+
+    def _branch_start(
+        self, s: Stream, key: str, branches: list[list[Step]]
+    ) -> tuple[DataFrame, Stream, str, str]:
+        """(keyed stream, branch start, key column, join column) for an
+        ELEMENT or TAGGED branch set. The key column rides the branch
+        stream's history and group columns; the keyed stream joins the
+        passing keys on the join column.
+
+        TAGGED: ``_tagged``; identical traversers share a tid unless a
+        branch draws, then each copy must flip on its own, so the tids
+        are made unique. ELEMENT: the branches start from the stream's
+        element projection (with the vertex props if attached), keyed
+        on ``_v`` for vertices and on a struct of the edge columns (or
+        the scalar) otherwise; struct equality is null-safe, so null
+        edge props still match."""
+        if key == TAGGED:
+            tagged, tcol = self._tagged(
+                s, unique=any(STEPS[n].draws for n in step_names(branches))
             )
-            how = "left_semi"
-        elif mode in ("and", "or"):
-            passing = unioned.distinct()
-            how = "left_semi"
-        else:  # not
-            passing = unioned.distinct()
-            how = "left_anti"
-        df = tagged.df.join(passing, tcol, how).drop(tcol)
-        hist = {k: v for k, v in s.history.items() if v != tcol}
-        return replace(
-            s, df=df, history=hist,
-            group_cols=[c for c in s.group_cols if c != tcol],
+            return tagged.df, tagged, tcol, tcol
+        # named by nesting depth, not a fresh uid: the persisted prefix
+        # fork is shared by plan equality, which ignores column names
+        kcol = f"{KEY}{sum(c.startswith(KEY) for c in s.df.columns)}"
+        if s.kind == "V":
+            cols = [c for c in s.df.columns if c in (VCOL, VLAB) or c.startswith(VP)]
+            keyed, kexpr, jcol = s.df, F.col(VCOL), VCOL
+        else:
+            cols = s.core_cols()
+            keyed = s.df.withColumn(kcol, F.struct(*cols))
+            kexpr, jcol = F.col(kcol), kcol
+        start = Stream(
+            df=keyed.select(*cols, kexpr.alias(kcol)), kind=s.kind, dtype=s.dtype,
+            props=s.props and s.kind == "V", history={kcol: kcol}, group_cols=[kcol],
         )
+        return keyed, start, kcol, jcol
+
+    def _hop_keys(self, st: Step) -> DataFrame:
+        """The ids of the vertices a bare hop branch moves from: the
+        label-filtered edge relation's src column for out/outE, dst for
+        in/inE (read from the dst-bucketed copy), both for both(). An
+        edge whose other end has no vertex row still counts, as in the
+        hop itself."""
+        sides = {"out": (ESRC,), "outE": (ESRC,), "in": (EDST,), "inE": (EDST,)}
+        keys = None
+        for col in sides.get(st.name, (ESRC, EDST)):
+            e = self._edges(by_dst=(col == EDST))
+            if st.args:
+                e = e.filter(F.col(ELAB).isin(list(st.args)))
+            e = e.select(F.col(col).alias(VCOL))
+            keys = e if keys is None else keys.unionByName(e)
+        return keys
+
+    def _key_filter(
+        self, s: Stream, keyed: DataFrame, kcol: str, jcol: str,
+        sets: list[DataFrame], mode: str, distinct: bool = True,
+    ) -> Stream:
+        """Keep the keyed stream's rows whose key is in all (and), any
+        (or) or none (not) of the branch key sets: one shuffle for the
+        whole set. The outputs are unioned (cheap, no exchange) and
+        reduced once, instead of a distinct per branch plus a join per
+        intersection; partial (map-side) aggregation absorbs
+        high-fanout branches before the exchange. ``distinct=False``
+        skips that reduce for sets that are plain relation columns."""
+        if mode == "and" and len(sets) > 1:
+            # a key passes iff every branch produced >=1 result: tag
+            # rows with their branch ordinal and count distinct ordinals
+            union = sets[0].withColumn("_br", F.lit(0))
+            for i, t in enumerate(sets[1:], start=1):
+                union = union.unionByName(t.withColumn("_br", F.lit(i)))
+            passing = (
+                union.groupBy(kcol)
+                .agg(F.countDistinct("_br").alias("_nb"))
+                .filter(F.col("_nb") == len(sets))
+                .select(kcol)
+            )
+        else:
+            passing = sets[0]
+            for t in sets[1:]:
+                passing = passing.unionByName(t)
+            if distinct:
+                passing = passing.distinct()
+        if kcol != jcol:
+            passing = passing.select(F.col(kcol).alias(jcol))
+        how = "left_anti" if mode == "not" else "left_semi"
+        df = keyed.join(passing, jcol, how)
+        if jcol not in s.df.columns:
+            df = df.drop(jcol)
+        return replace(s, df=df)
+
+    def _inline_filter(
+        self, s: Stream, branches: list[list[Step]], mode: str
+    ) -> Optional[Stream]:
+        """and/or/not over row-filter branches as ONE boolean Column over
+        the stream: no tag, no branch compile, no join back. None when a
+        step cannot be expressed as a Column here."""
+        got = self._row_filter_conds(s, branches, inner_ok=(mode != "not"))
+        if got is None:
+            return None
+        ps, conds = got
+        keep = conds[0]
+        for c in conds[1:]:
+            keep = (keep & c) if mode == "and" else (keep | c)
+        df = ps.df.filter(~keep if mode == "not" else keep)
+        if ps.df is not s.df and not ps.props:  # left-joined: detach again
+            return replace(s, df=df.select(*s.df.columns))
+        return replace(ps, df=df)
 
     def _suffix_flags_filter(
-        self, s: Stream, tagged: Stream, pre: Stream,
-        suffixes: list[list[Step]], tcol: str, mode: str,
-    ) -> Optional[Stream]:
+        self, pre: Stream, suffixes: list[list[Step]], kcol: str, mode: str
+    ) -> Optional[DataFrame]:
         """When every branch suffix is a chain of row-local filters,
         evaluate the whole and()/or() in ONE pass over the factored
-        prefix: per-branch boolean conditions -> one per-tid
-        aggregation (and: a max-flag per branch; or: one disjunction +
-        distinct) -> semi join. Returns None when any suffix needs the
-        generic per-branch compile."""
-        if any(
-            not STEPS[st.name].row_filter for b in suffixes for st in b
-        ):
+        prefix: per-branch boolean conditions -> the passing keys (and:
+        one per-key max-flag aggregation; or: one disjunction). Returns
+        None when any suffix needs the generic per-branch compile."""
+        if any(not STEPS[st.name].row_filter for b in suffixes for st in b):
             return None
-        if pre.kind == "V" and not pre.props:
-            needs_props = [
-                any(st.name in ("has", "hasNot", "hasKey", "hasLabel")
-                    for st in b)
-                for b in suffixes
-            ]
-            if any(needs_props):
-                # the props attach is an INNER vertex join: it drops
-                # prefix rows whose target has no vertex row (dangling
-                # edges). That matches per-branch semantics ONLY when
-                # every branch itself requires the vertex row — a
-                # branch with no property step keeps dangling witnesses
-                # in per-branch evaluation, so a MIXED branch set must
-                # take the generic factored path (confirmed divergence:
-                # or(out(e), out(e).has(k,p)) on a dangling edge)
-                if not all(needs_props):
-                    return None
-                pre = self._ensure_vprops(pre)
-        conds: list[Column] = []
-        for b in suffixes:
-            cs: list[Column] = []
-            for st in b:
-                c = self._row_filter_condition(pre, st)
-                if c is None:
-                    return None
-                cs.append(c)
-            cond = cs[0] if cs else F.lit(True)
-            for c in cs[1:]:
-                cond = cond & c
-            conds.append(F.coalesce(cond, F.lit(False)))
+        got = self._row_filter_conds(pre, suffixes, inner_ok=True)
+        if got is None:
+            return None
+        pre, conds = got
         if mode == "and" and len(conds) > 1:
             aggs = [
                 F.max(F.when(c, 1).otherwise(0)).alias(f"_b{i}")
                 for i, c in enumerate(conds)
             ]
-            flags = pre.df.groupBy(tcol).agg(*aggs)
-            keep = flags
+            keep = pre.df.groupBy(kcol).agg(*aggs)
             for i in range(len(conds)):
                 keep = keep.filter(F.col(f"_b{i}") == 1)
-            passing = keep.select(tcol)
-        else:
-            any_c = conds[0]
-            for c in conds[1:]:
-                any_c = any_c | c
-            passing = pre.df.filter(any_c).select(tcol).distinct()
-        how = "left_anti" if mode == "not" else "left_semi"
-        df = tagged.df.join(passing, tcol, how).drop(tcol)
-        hist = {k: v for k, v in s.history.items() if v != tcol}
-        return replace(
-            s, df=df, history=hist,
-            group_cols=[c for c in s.group_cols if c != tcol],
-        )
+            return keep.select(kcol)
+        any_c = conds[0]
+        for c in conds[1:]:
+            any_c = any_c | c
+        return pre.df.filter(any_c).select(kcol)
+
+    def _row_filter_conds(
+        self, s: Stream, branches: list[list[Step]], inner_ok: bool
+    ) -> Optional[tuple[Stream, list[Column]]]:
+        """(stream, one null-as-false Column per branch of row filters
+        over its rows), or None when a step has no Column form.
+
+        A branch that reads the vertex row (a property or the label) of
+        a props-less vertex stream fails on a row whose vertex is absent
+        (dangling edge): per branch, the props attach is an INNER vertex
+        join. So the props attach by inner join only when every branch
+        reads the row and the caller keeps rows passing some branch
+        (``inner_ok``: and/or); otherwise by a left join whose presence
+        flag fails just the branches that read the row, so that not(has(k))
+        and or(out(e), out(e).has(k, p)) keep their dangling rows. That
+        stream comes back with ``props=False``: those rows' props are
+        null, not absent."""
+        reads = [any(self._reads_vertex_row(s, st) for st in b) for b in branches]
+        present: Optional[Column] = None
+        if inner_ok and all(reads):
+            s = self._ensure_vprops(s)
+        elif any(reads):
+            flag = f"_vr{next(_uid)}"
+            v = self._vertices().withColumn(flag, F.lit(True))
+            s = replace(s, df=s.df.join(v, VCOL, "left"), props=True)
+            present = F.col(flag)
+        conds: list[Column] = []
+        for b, needs_row in zip(branches, reads):
+            cond = present if needs_row and present is not None else F.lit(True)
+            for st in b:
+                c = self._row_filter_condition(s, st)
+                if c is None:
+                    return None
+                cond = cond & c
+            conds.append(F.coalesce(cond, F.lit(False)))
+        if present is not None:
+            # rows of absent vertices carry null props: not attached
+            s = replace(s, props=False)
+        return s, conds
+
+    def _reads_vertex_row(self, s: Stream, st: Step) -> bool:
+        """Whether filter step ``st`` attaches the vertex row to ``s``
+        (``_prop_col``'s rule: the label, or a declared vertex key)."""
+        if s.kind != "V" or s.props:
+            return False
+        if st.name == "hasLabel":
+            return True
+        keys = st.args if st.name == "hasKey" else st.args[:1] if st.name in ("has", "hasNot") else ()
+        return any(k == "label" or k in self.g.vertex_keys for k in keys)
 
     def _row_filter_condition(self, pre: Stream, st: Step) -> Optional[Column]:
         """The boolean Column a single filter step would apply to

@@ -90,7 +90,7 @@ def _parse_arg(tok: str) -> Any:
         inner = tok[tok.index("(") + 1 : tok.rindex(")")]
         args = [] if not inner.strip() else [_parse_literal(a) for a in _split_top(inner, ",")]
         return Pred(head, tuple(args))
-    if "(" in tok and head in STEPS and STEPS[head].parse:
+    if "(" in tok and head in STEPS and (STEPS[head].parse or STEPS[head].alias):
         return tuple(parse_steps(tok))
     if tok in ("incr", "asc"):
         return ("ORDER", True)

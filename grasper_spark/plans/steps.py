@@ -79,6 +79,12 @@ class StepInfo:
     #: grouping. coin(p) is a content-hashed per-traverser draw,
     #: identical under grouping
     auto: bool = False
+    #: reads the traverser's history (as-labels, the recorded path) or a
+    #: side-effect store: "always", "labels" (only when given labels,
+    #: dedup("a")) or "" (never). A labelled filter whose branches read
+    #: nothing of the kind depends on the current element alone
+    #: (``branch_key``)
+    reads: str = ""
 
 
 _I = StepInfo
@@ -98,36 +104,36 @@ STEPS: dict[str, StepInfo] = {
     "has": _ROW_FILTER, "hasId": _ROW_FILTER, "hasNot": _ROW_FILTER,
     "hasKey": _ROW_FILTER, "hasLabel": _ROW_FILTER, "is": _ROW_FILTER,
     "hasValue": _I(FILTER, factor=True, auto=True),
-    "where": _I(FILTER, factor=True, auto=True),
-    "dedup": _I(FILTER, factor=True, auto=True),
+    "where": _I(FILTER, factor=True, auto=True, reads="always"),
+    "dedup": _I(FILTER, factor=True, auto=True, reads="labels"),
     "coin": _I(FILTER, draws=True, auto=True),
     "sample": _I(FILTER, prepare=False),
     "range": _I(FILTER), "limit": _I(FILTER),
     "skip": _I(FILTER), "tail": _I(FILTER),
-    "simplePath": _I(FILTER, factor=True, prepare=False),
-    "cyclicPath": _I(FILTER, prepare=False),
+    "simplePath": _I(FILTER, factor=True, prepare=False, reads="always"),
+    "cyclicPath": _I(FILTER, prepare=False, reads="always"),
     "values": _I(MAP, path=True, factor=True, auto=True),
     "label": _I(MAP, path=True, factor=True, auto=True),
     "key": _I(MAP, path=True, factor=True, auto=True),
     "properties": _I(MAP, path=True, auto=True),
-    "select": _I(MAP, path=True, auto=True),
+    "select": _I(MAP, path=True, auto=True, reads="always"),
     "id": _I(MAP, auto=True), "valueMap": _I(MAP, auto=True),
     "elementMap": _I(MAP, auto=True), "project": _I(MAP, auto=True),
     "constant": _I(MAP, auto=True),
-    "path": _I(MAP, prepare=False),
+    "path": _I(MAP, prepare=False, reads="always"),
     "count": _REDUCE, "sum": _REDUCE, "max": _REDUCE, "min": _REDUCE,
     "mean": _REDUCE, "fold": _REDUCE, "group": _REDUCE, "groupCount": _REDUCE,
-    "dedupCount": _I(BARRIER, parse=False, barrier=True),
+    "dedupCount": _I(BARRIER, parse=False, barrier=True, reads="labels"),
     "coNeqDedupCount": _I(BARRIER, parse=False),
     "order": _I(BARRIER),
     "union": _BRANCH, "and": _BRANCH, "or": _BRANCH, "not": _BRANCH,
     "optional": _BRANCH, "coalesce": _BRANCH, "choose": _BRANCH,
-    "match": _BRANCH,
+    "match": _I(BRANCH, auto=True, reads="always"),
     "repeat": _I(BRANCH),
     "as": _I(SIDE_EFFECT, auto=True),
     "aggregate": _I(SIDE_EFFECT, prepare=False),
     "store": _I(SIDE_EFFECT, parse=False, alias="aggregate", prepare=False),
-    "cap": _I(SIDE_EFFECT, prepare=False),
+    "cap": _I(SIDE_EFFECT, prepare=False, reads="always"),
     "by": _I(MODULATOR, hosts=("project", "group", "groupCount", "order", "path")),
     "times": _I(MODULATOR, hosts=("repeat",)),
     "until": _I(MODULATOR, hosts=("repeat",)),
@@ -171,3 +177,46 @@ def bind_param(st: Step, value: Any) -> Step:
     """The :func:`param_slot` step ``st`` filtering on ``value``."""
     pred = Pred("eq", (value,))
     return replace(st, args=(pred,) if st.name == "hasId" else (st.args[0], pred))
+
+
+#: the keys a labelled filter (and/or/not, where(t)) can decide its
+#: branch set on, cheapest first (``branch_key``)
+INLINE, HOP, ELEMENT, TAGGED = "inline", "hop", "element", "tid"
+#: a bare hop's branch is "has an (L-labelled) edge on that side"
+HOPS = ("out", "in", "both", "outE", "inE")
+
+
+def reads_history(st: Step) -> bool:
+    """Whether step ``st`` reads history or a side-effect store."""
+    reads = STEPS[st.name].reads
+    return reads == "always" or (reads == "labels" and bool(st.args))
+
+
+def branch_key(branches: Any) -> str:
+    """The cheapest exact key for a labelled filter's branch sets
+    (Grasper's BRANCHFILTER tags every traverser instead,
+    expert/labelled_branch_expert.hpp:184-289):
+
+    - INLINE: every branch is a non-empty chain of row filters, so the
+      whole and/or/not is one boolean Column over the stream
+      (TinkerPop's InlineFilterStrategy);
+    - HOP: every branch is one bare hop, so a vertex passes iff its id
+      is in the label-filtered edge relation's src (or dst) column;
+    - ELEMENT: every step, nested ones included, is per-traverser
+      (``auto``), draws nothing and reads no history or store, so the
+      outcome depends on the current element alone and the branches key
+      on it;
+    - TAGGED: otherwise, a per-traverser content-hash tid."""
+    if all(b and all(STEPS[st.name].row_filter for st in b) for b in branches):
+        return INLINE
+    for n in nodes(branches):
+        if isinstance(n, Step):
+            row = STEPS[n.name]
+            if row.draws or not row.auto or reads_history(n):
+                return TAGGED
+    if all(
+        len(b) == 1 and b[0].name in HOPS and all(isinstance(a, str) for a in b[0].args)
+        for b in branches
+    ):
+        return HOP
+    return ELEMENT

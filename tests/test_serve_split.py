@@ -1,10 +1,10 @@
-"""tools/serve_split.py groups a serve result's requests by template."""
+"""tools/bench_split.py groups a perfbench result's requests by template."""
 
 from types import SimpleNamespace
 
 import pytest
 
-from tools.serve_split import split
+from tools.bench_split import split
 
 
 def test_split_groups_by_template_costliest_first():
@@ -38,3 +38,16 @@ def test_split_rejects_a_stream_that_does_not_match():
     with pytest.raises(ValueError, match="regenerated stream"):
         split({"requests": [[0, "adhoc", 0.1, None]]}, [{"kind": "point", "t": 0}],
               ([SimpleNamespace(query="P0")], []))
+
+
+def test_split_names_olap_and_curate_requests_by_name():
+    timed = [{"kind": "gremlin", "name": "or_count"}, {"kind": "algo", "name": "cc"},
+             {"kind": "gremlin", "name": "or_count"}]
+    result = {"requests": [[0, "gremlin", 0.1, None], [1, "algo", 0.5, None],
+                           [2, "gremlin", 0.3, None]]}
+    rows = split(result, timed, None)
+    assert [(r[0], r[1]) for r in rows] == [("algo: cc", 1), ("gremlin: or_count", 2)]
+    assert rows[1][3] == pytest.approx(200.0)
+    curate = split({"requests": [[0, "minhash_signature", 0.2, None]]},
+                   [{"op": "minhash_signature"}], None)
+    assert curate[0][:2] == ("minhash_signature", 1)

@@ -13,11 +13,11 @@ from hypothesis import given, settings
 import grasper_spark.plans.steps as steps_mod
 from grasper_spark import G
 from grasper_spark.plans.compiler import GremlinCompiler
-from grasper_spark.plans.parser import ParseError, _parse_step, parse_query
+from grasper_spark.plans.parser import ParseError, _parse_step, parse_query, parse_steps
 from grasper_spark.plans.prepared import FallbackEligible, _validate_steps
 from grasper_spark.plans.steps import (
     BARRIER, BRANCH, FILTER, MAP, MODULATOR, MOVE, SIDE_EFFECT, SOURCE,
-    STEPS, Step, bind_param, nodes, param_slot, step_names,
+    STEPS, Step, bind_param, branch_key, nodes, param_slot, step_names,
 )
 from grasper_spark.plans.predicates import P
 from tests.test_prepared_differential import point_shape
@@ -108,8 +108,8 @@ SNIPPETS = [
     ('values("age")', _AUTO4), ('label()', _AUTO4), ('key()', _AUTO4),
     ('properties("age")', _AUTO4), ('as("a")', _AUTO4), ('select("a")', _AUTO4),
     ('aggregate("x")', _FALL4),
-    # the store alias is rewritten at the top level only
-    ('store("x")', ("fallback", "parse", "parse", "parse")),
+    # the store alias is rewritten inside branch arguments too
+    ('store("x")', _FALL4),
     ('cap("x")', _FALL4),
     ('count()', _BARRIER4), ('sum()', _BARRIER4), ('max()', _BARRIER4),
     ('min()', _BARRIER4), ('mean()', _BARRIER4), ('group()', _BARRIER4),
@@ -204,3 +204,88 @@ def test_prepare_decisions(template, want):
 def test_differential_point_shapes_auto_prepare(shape):
     steps, _ = shape
     assert _decide(steps) == "auto"
+
+
+def test_store_alias_parses_inside_branch_arguments():
+    for wrap in _WRAPS[1:]:
+        steps = parse_query("g.V()." + wrap.format('store("x")'))
+        assert "aggregate" in step_names(steps) and "store" not in step_names(steps)
+
+
+# ---- labelled-filter keys ---------------------------------------------
+#
+# The key `branch_key` picks for a snippet nested in or(…, …), and(…, …)
+# and not(…): "inline" (one Column), "hop" (edge key column), "element"
+# (the current element) or "tid" (per-traverser tag).
+
+_ROW = ("inline",) * 3
+_HOP3 = ("hop",) * 3
+_EL3 = ("element",) * 3
+_TID3 = ("tid",) * 3
+
+KEYS = {
+    'has("age", 29)': _ROW, 'has("age", gt(29))': _ROW, 'hasId(1)': _ROW,
+    'hasNot("age")': _ROW, 'hasKey("age")': _ROW, 'hasLabel("person")': _ROW,
+    'is(29)': _ROW, 'hasValue(29)': _EL3,
+    'where(neq("a"))': _TID3, 'where(out())': _EL3,
+    'coin(0.5)': _TID3, 'sample(2)': _TID3,
+    'out("knows")': _HOP3, 'in("knows")': _HOP3, 'both()': _HOP3,
+    'outE("knows")': _HOP3, 'inE("knows")': _HOP3, 'bothE()': _EL3,
+    'outV()': _EL3, 'inV()': _EL3, 'bothV()': _EL3,
+    'values("age")': _EL3, 'label()': _EL3, 'key()': _EL3,
+    'properties("age")': _EL3, 'as("a")': _EL3, 'select("a")': _TID3,
+    'aggregate("x")': _TID3, 'store("x")': _TID3, 'cap("x")': _TID3,
+    'count()': _TID3, 'sum()': _TID3, 'max()': _TID3, 'min()': _TID3,
+    'mean()': _TID3, 'group()': _TID3, 'group().by("age")': _TID3,
+    'groupCount()': _TID3, 'groupCount().by("age")': _TID3, 'dedup()': _EL3,
+    'dedup("a")': _TID3,
+    'order()': _TID3, 'order().by("age", decr)': _TID3,
+    'range(0, 2)': _TID3, 'limit(2)': _TID3, 'skip(1)': _TID3,
+    'tail(1)': _TID3, 'union(out(), in())': _EL3,
+    'path()': _TID3, 'path().by("name")': _TID3,
+    'repeat(out()).times(2)': _TID3,
+    'repeat(out()).until(hasLabel("software"))': _TID3,
+    'repeat(out()).emit().times(2)': _TID3,
+    'and(out(), in())': _EL3, 'or(out(), in())': _EL3,
+    'not(out())': _EL3, 'optional(out())': _EL3,
+    'choose(out("knows"), out(), in())': _EL3,
+    'project("a", "b").by("name").by()': _EL3,
+    'match(as("a").out().as("b"))': _TID3, 'coalesce(out(), in())': _EL3,
+    'id()': _EL3, 'valueMap()': _EL3, 'valueMap("age")': _EL3,
+    'elementMap()': _EL3, 'simplePath()': _TID3, 'cyclicPath()': _TID3,
+    'fold()': _TID3, 'constant(1)': _EL3, 'inject(1)': _TID3,
+    'dedup().count()': _TID3, 'out().count()': _TID3,
+    'out().has("age", 29)': _EL3, 'out().coin(0.5)': _TID3,
+    'has("age", 29).has("name", "josh")': _ROW,
+}
+
+
+@pytest.mark.parametrize("snippet", sorted(KEYS))
+def test_branch_key_decisions(snippet):
+    got = []
+    for wrap in ('or({0}, {0})', 'and({0}, {0})', 'not({0})'):
+        (st,) = parse_steps(wrap.format(snippet))
+        got.append(branch_key(st.args))
+    assert tuple(got) == KEYS[snippet]
+
+
+def test_branch_key_mixed_sets_take_the_costlier_key():
+    def key(q):
+        (st,) = parse_steps(q)
+        return branch_key(st.args)
+
+    assert key('or(has("age", 29), out())') == "element"
+    assert key('or(out("a"), out().has("age", 29))') == "element"
+    assert key('or(out(), select("a"))') == "tid"
+    assert key('and(out(), coin(0.5))') == "tid"
+    assert key('and(has("age", 29), where(out().values("name").count()))') == "tid"
+
+
+#: the "reads history or a side-effect store" column, pinned per step
+READS = {"where": "always", "dedup": "labels", "dedupCount": "labels",
+         "simplePath": "always", "cyclicPath": "always", "select": "always",
+         "path": "always", "match": "always", "cap": "always"}
+
+
+def test_reads_column():
+    assert {n: r.reads for n, r in STEPS.items() if r.reads} == READS

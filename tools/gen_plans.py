@@ -239,9 +239,11 @@ def main() -> None:
                 A.out("placed").has("totalprice", P.gt(150000.0)),
             ).values("name").df(),
             "Both branches share the out('placed') prefix, so the compiler factors "
-            "it: ONE expansion join feeds a per-tid flag aggregation (max-if per "
-            "branch condition) and one semi join — per-branch evaluation would run "
-            "the expansion once per branch (r8 rewrite; g_and sf1 2.1s -> 0.78s).",
+            "it: ONE expansion join feeds a per-vertex flag aggregation (max-if per "
+            "branch condition) and one semi join on the vertex id — per-branch "
+            "evaluation would run the expansion once per branch (r8 rewrite; g_and "
+            "sf1 2.1s -> 0.78s). The branches read only the current vertex, so they "
+            "key on its id (`_key0`), not on a per-traverser content-hash tag.",
         ),
         (
             "Q8 shape: aggregate('x') + where(without('x'))",
@@ -250,7 +252,8 @@ def main() -> None:
             .in_("placed").out("placed").where(P.without("big")).dedup().count().df(),
             "Side-effect membership compiles to a broadcast anti-join against the "
             "aggregate store — the Spark analogue of Grasper's replicated side-effect "
-            "table (core/message.cpp:270-289).",
+            "table (core/message.cpp:270-289). The store side is not deduplicated "
+            "first: a semi or anti join ignores duplicate keys.",
         ),
         (
             "union(): branch input persisted at the fork",
